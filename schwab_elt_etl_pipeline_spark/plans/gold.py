@@ -241,27 +241,25 @@ def gold_scope(
     min_time: dt.datetime,
     width: int,
     opt_range: int = 100,
-    vert: DataFrame | None = None,
-    vert_ts: DataFrame | None = None,
 ):
-    """Persist-hygienic ``SP_PROCESS_VERTS``: yields (VERT, VERT_TS) with the
-    diamond intermediates (dense legs; leg pairs — each consumed by two
-    downstream actions) persisted for the duration of the block, and
-    UNPERSISTED on exit. Run every consuming action (writes/collects) inside
-    the block. On a long-running driver (the streaming Gold maintenance loop
-    calls this once per touched day per micro-batch) un-released caches would
-    accumulate storage memory without bound — this scope is the discipline
-    that prevents it.
+    """Persist-hygienic ``SP_PROCESS_VERTS``: yields the day's (VERT,
+    VERT_TS) rows — every spread definition and every priced (VID, T) row
+    the day produces, not yet anti-joined against existing tables. The
+    caller hands each straight to ``ParquetTable.insert_new``, whose
+    anti-join is then the only one. The diamond intermediates (dense legs;
+    leg pairs — each consumed by both writes) are persisted for the
+    duration of the block and UNPERSISTED on exit. Run every consuming
+    action (writes/collects) inside the block. On a long-running driver
+    (the streaming Gold maintenance loop calls this once per touched day
+    per micro-batch) un-released caches would accumulate storage memory
+    without bound — this scope is the discipline that prevents it.
     """
     lo, hi = strike_range(underlying, min_time)
     dense = densify_legs(optm, opt, min_time, lo - opt_range, hi + opt_range).persist()
     pairs = pair_legs(dense, width).persist()
     try:
-        new_vert = build_verts(pairs, width, vert)
-        vert_all = new_vert if vert is None else vert.unionByName(new_vert)
-        new_ts = build_vert_ts(pairs, vert_all, width, vert_ts)
-        ts_all = new_ts if vert_ts is None else vert_ts.unionByName(new_ts)
-        yield vert_all, ts_all
+        vert = build_verts(pairs, width)
+        yield vert, build_vert_ts(pairs, vert, width)
     finally:
         pairs.unpersist()
         dense.unpersist()

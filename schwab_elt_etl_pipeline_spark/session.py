@@ -12,6 +12,13 @@ delegate to Catalyst/Tungsten and turn on the knobs that matter at scale:
   agree with naive-timestamp oracles.
 - Nanosecond parquet timestamps are read as longs and normalized by the
   sources layer (Spark has no TIMESTAMP(NANOS) support).
+- Generated-code cache: Spark compiles whole-stage code for every physical
+  plan and keeps the compiled classes in a JVM-wide cache of 100 entries by
+  default. One medallion micro-batch needs more than that, so at 100 every
+  batch recompiled its classes from scratch (~1 s per batch on 4 cores).
+  ``get_spark`` raises the cache to :data:`CODEGEN_CACHE_ENTRIES`. The size is
+  a *static* conf read once per JVM: a session not built by ``get_spark``
+  keeps Spark's 100, and :func:`ensure_engine_confs` cannot change it.
 """
 
 from __future__ import annotations
@@ -21,6 +28,11 @@ import os
 from pyspark.sql import SparkSession
 
 PACIFIC = "America/Los_Angeles"
+
+#: ``spark.sql.codegen.cache.maxEntries`` for sessions built by
+#: :func:`get_spark`: holds a micro-batch's generated classes, which Spark's
+#: default of 100 does not, so a steady-state batch compiles nothing new.
+CODEGEN_CACHE_ENTRIES = 2000
 
 #: Runtime-settable confs every engine entry point should ensure. Kept minimal
 #: so they can also be applied to an externally created session (see
@@ -82,6 +94,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for key, value in _RUNTIME_CONFS.items():
         builder = builder.config(key, value)

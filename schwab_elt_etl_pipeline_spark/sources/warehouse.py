@@ -26,12 +26,20 @@ import shutil
 import uuid
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from schwab_elt_etl_pipeline_spark.operators.merge import insert_new, merge_upsert
 
 _POINTER = "_CURRENT"
+
+
+def _footer_rows(path: str) -> int:
+    """Row count of a parquet file, read from its footer."""
+    import pyarrow.parquet as pq
+
+    return pq.read_metadata(path).num_rows
 
 
 def zorder_code(df: DataFrame, cols: Sequence[str], bits: int = 16) -> DataFrame:
@@ -125,6 +133,8 @@ class ParquetTable:
         if cluster_order not in ("range", "zorder"):
             raise ValueError(f"cluster_order must be 'range' or 'zorder': {cluster_order}")
         self.cluster_order = cluster_order
+        # version -> the schema its first read inferred (see :meth:`read`)
+        self._schemas: dict[int, StructType] = {}
         os.makedirs(self.path, exist_ok=True)
 
     def _layout(self, df: DataFrame) -> DataFrame:
@@ -168,10 +178,17 @@ class ParquetTable:
         """Read the current version, or time-travel to an earlier one (older
         ``_v{n}`` dirs stay on disk until :meth:`vacuum`).
 
+        The first read of a version infers its schema (one Spark job over a
+        file footer); the table remembers it and hands it to every later
+        reader of that version, so they launch no job. A write through this
+        table that changes a version's data columns, or adds a partition
+        directory, forgets the remembered schema.
+
         ``merge_schema=True`` unions the schemas of all data files (columns
         added by an evolved :meth:`append` read as NULL in pre-evolution
         files) — the Delta/Iceberg schema-evolution read, at the cost of a
-        footer read per file; without it the scan trusts one file's schema.
+        footer read per file; it always infers. Without it the scan trusts
+        one file's schema.
         """
         if version is None:
             version = self.current_version()
@@ -180,16 +197,35 @@ class ParquetTable:
         vdir = self._version_dir(version)
         if not os.path.isdir(vdir):
             raise FileNotFoundError(f"version {version} not found (vacuumed?): {vdir}")
-        reader = self.spark.read
         if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(vdir)
+            return self.spark.read.option("mergeSchema", "true").parquet(vdir)
+        schema = self._schemas.get(version)
+        if schema is not None:
+            return self.spark.read.schema(schema).parquet(vdir)
+        df = self.spark.read.parquet(vdir)
+        self._schemas[version] = df.schema
+        return df
+
+    def _data_types(self, schema: StructType) -> dict[str, str]:
+        """Data (non-partition) column -> type, nullability ignored."""
+        return {
+            f.name: f.dataType.simpleString()
+            for f in schema.fields
+            if f.name not in self.partition_by
+        }
+
+    def _note_write(self, version: int, df: DataFrame, new_partition: bool) -> None:
+        """Forget ``version``'s remembered schema if rows just written into
+        it could change what inference finds there."""
+        known = self._schemas.get(version)
+        if known is not None and (
+            new_partition or self._data_types(known) != self._data_types(df.schema)
+        ):
+            del self._schemas[version]
 
     def vacuum(self, keep_last: int = 1) -> list[int]:
         """Delete all but the newest ``keep_last`` versions (never the
         current one). Returns the versions removed."""
-        import shutil
-
         current = self.current_version()
         if current is None:
             return []
@@ -224,14 +260,7 @@ class ParquetTable:
         :class:`ConcurrentWriteConflict` (staging cleaned up, table
         untouched) instead of silently losing the other writer's rows.
         """
-        staging = os.path.join(self.path, f"_staging_{uuid.uuid4().hex}")
-        writer = self._layout(df).write.mode("overwrite")
-        if self.compression:
-            writer = writer.option("compression", self.compression)
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(staging)
-
+        staging = self._stage(df)
         if base_version is not None and (self.current_version() or 0) != base_version:
             shutil.rmtree(staging, ignore_errors=True)
             raise ConcurrentWriteConflict(
@@ -261,8 +290,30 @@ class ParquetTable:
                     ) from None
                 version += 1  # last-writer-wins path: take the next slot
 
+        self._schemas.pop(version, None)  # a recreated table may reuse the number
         self._flip_pointer_monotonic(version)
         return version
+
+    def _writer(self, df: DataFrame) -> DataFrameWriter:
+        """``df`` in the table's layout, codec and partitioning, to write."""
+        writer = self._layout(df).write
+        if self.compression:
+            writer = writer.option("compression", self.compression)
+        if self.partition_by:
+            writer = writer.partitionBy(*self.partition_by)
+        return writer
+
+    def _stage(self, df: DataFrame) -> str:
+        """Write ``df`` into a private ``_staging_<uuid>`` dir and return its
+        path. A write that raises removes the dir before the error
+        propagates, so a failed write leaves nothing in the table root."""
+        staging = os.path.join(self.path, f"_staging_{uuid.uuid4().hex}")
+        try:
+            self._writer(df).mode("overwrite").parquet(staging)
+        except BaseException:
+            shutil.rmtree(staging, ignore_errors=True)
+            raise
+        return staging
 
     def _flip_pointer_monotonic(self, version: int) -> None:
         """Advance the pointer to ``version`` iff it is ahead of the current
@@ -315,17 +366,22 @@ class ParquetTable:
         if version is None:
             self.overwrite_versioned(df)
             return
-        writer = self._layout(df).write.mode("append")
-        if self.compression:
-            writer = writer.option("compression", self.compression)
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(self._version_dir(version))
+        self._writer(df).mode("append").parquet(self._version_dir(version))
+        self._note_write(version, df, new_partition=bool(self.partition_by))
 
     # -- idempotent loads ---------------------------------------------------
     def insert_new(self, batch: DataFrame, keys: Sequence[str]) -> int:
         """IF-NOT-EXISTS semantics (J3/J9): append only unseen keys.
         Returns the number of rows inserted.
+
+        One Spark write per call. The anti-join result is written once into
+        a private ``_staging_<uuid>`` dir; the row count comes from the
+        staged files' parquet footers, and only the files that hold rows
+        move into the current version dir (under their ``col=val/`` dirs
+        when partitioned). A zero-row insert therefore leaves the table's
+        files untouched, and a write that raises leaves no staging dir.
+        The first insert into a missing table commits version 1 through
+        :meth:`overwrite_versioned` and counts its files the same way.
 
         Concurrency: the append path assumes ONE writer per key space (the
         streaming foreachBatch contract — Structured Streaming serializes
@@ -335,19 +391,31 @@ class ParquetTable:
         (``insert_only=True``), whose optimistic conflict detection retries
         from a fresh read instead."""
         if not self.exists():
-            deduped = batch.dropDuplicates(list(keys))
-            self.overwrite_versioned(deduped)
-            return deduped.count()
-        # one computation for both consumers: count() and append() would
-        # otherwise each re-run the anti-join + the batch's full lineage —
-        # twice per micro-batch on every streaming sink that funnels here
-        fresh = insert_new(batch, self.read(), keys=keys).localCheckpoint(
-            eager=True
-        )
-        n = fresh.count()
-        if n:
-            self.append(fresh)
-        return n
+            version = self.overwrite_versioned(batch.dropDuplicates(list(keys)))
+            return sum(_footer_rows(f) for f in self.data_files(version))
+        fresh = insert_new(batch, self.read(), keys=keys)
+        staging = self._stage(fresh)
+        try:
+            version = self.current_version()
+            vdir = self._version_dir(version)
+            inserted, new_partition = 0, False
+            for root, _dirs, files in os.walk(staging):
+                dest = os.path.join(vdir, os.path.relpath(root, staging))
+                for name in files:
+                    src = os.path.join(root, name)
+                    rows = _footer_rows(src) if name.endswith(".parquet") else 0
+                    if not rows:
+                        continue
+                    if not os.path.isdir(dest):
+                        os.makedirs(dest)
+                        new_partition = True
+                    os.rename(src, os.path.join(dest, name))
+                    inserted += rows
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
+        if inserted:
+            self._note_write(version, fresh, new_partition)
+        return inserted
 
     def merge(
         self,

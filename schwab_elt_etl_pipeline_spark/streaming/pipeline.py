@@ -115,11 +115,22 @@ def apply_medallion_batch(
     from schwab_elt_etl_pipeline_spark.plans.silver import parse_underlying
 
     und = parse_underlying(batch)
-    has_und = not und.isEmpty()
+    parsed = parse_quotes(batch)
+    # ONE driver action finds which sides the batch carries and every day
+    # it touched (via option ticks OR via underlying marks: a $SPX-only
+    # batch can complete a day whose option ticks arrived earlier, so
+    # driving the Gold loop off parsed alone would silently leave that
+    # day's VERT/VERT_TS unbuilt).
+    touched = (
+        und.select(F.lit(True).alias("und"), F.to_date("T").alias("d"))
+        .unionByName(parsed.select(F.lit(False).alias("und"), F.to_date("T").alias("d")))
+        .distinct()
+        .collect()
+    )
+    has_und = any(r["und"] for r in touched)
+    has_parsed = any(not r["und"] for r in touched)
     if has_und:
         underlying_table.insert_new(und, keys=["T"])
-    parsed = parse_quotes(batch)
-    has_parsed = not parsed.isEmpty()
     if has_parsed:
         if opt_table.exists():
             opt_table.insert_new(
@@ -133,25 +144,11 @@ def apply_medallion_batch(
 
     if not underlying_table.exists() or not optm_table.exists():
         return  # Gold needs both marks and an $SPX strike range
-    # Gold reruns for every day this batch touched — via option ticks OR
-    # via underlying marks (a $SPX-only batch can complete a day whose
-    # option ticks arrived earlier; driving the loop off parsed alone
-    # would silently leave that day's VERT/VERT_TS unbuilt). ONE driver
-    # action computes the touched-day set (union of both projections);
-    # a second computes, for all touched days at once, each day's
-    # min mark time and whether both sides are present — replacing the
-    # former per-day isEmpty/agg round-trips in this hot loop.
-    sides = []
-    if has_und:
-        sides.append(und.select(F.to_date("T").alias("d")))
-    if has_parsed:
-        sides.append(parsed.select(F.to_date("T").alias("d")))
-    if not sides:
-        return
-    touched = sides[0] if len(sides) == 1 else sides[0].unionByName(sides[1])
-    days = sorted(r["d"] for r in touched.distinct().collect())
+    days = sorted({r["d"] for r in touched if r["d"] is not None})
     if not days:
         return
+    # A second action computes, for all touched days at once, each day's
+    # min mark time and whether both sides are present.
     opt_all = opt_table.read()
     optm_all = optm_table.read()
     und_all = underlying_table.read()
@@ -167,20 +164,13 @@ def apply_medallion_batch(
         day, min_time = r["d"], r["min_time"]
         day_optm = optm_all.filter(F.to_date("T") == F.lit(day))
         day_und = und_all.filter(F.to_date("T") == F.lit(day))
-        vert_prev = vert_table.read() if vert_table.exists() else None
-        ts_prev = vert_ts_table.read() if vert_ts_table.exists() else None
         # gold_scope persists the day's diamond intermediates across the
         # two writes below and releases them on exit — the hot loop never
-        # accumulates storage memory across micro-batches.
+        # accumulates storage memory across micro-batches. insert_new's
+        # anti-join is the only one each Gold row meets.
         with gold_scope(
             day_optm, opt_all, day_und, min_time=min_time, width=width,
-            opt_range=opt_range, vert=vert_prev, vert_ts=ts_prev,
-        ) as (vert_all, ts_all):
-            if vert_prev is None:
-                vert_table.overwrite_versioned(vert_all)
-            else:
-                vert_table.insert_new(vert_all, keys=["SID", "LID"])
-            if ts_prev is None:
-                vert_ts_table.overwrite_versioned(ts_all)
-            else:
-                vert_ts_table.insert_new(ts_all, keys=["VID", "T"])
+            opt_range=opt_range,
+        ) as (vert, vert_ts):
+            vert_table.insert_new(vert, keys=["SID", "LID"])
+            vert_ts_table.insert_new(vert_ts, keys=["VID", "T"])

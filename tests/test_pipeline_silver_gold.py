@@ -204,3 +204,36 @@ def test_gold_scope_releases_caches(spark, quotes):
 
     # scope output matches the lazy variant
     assert n_vert == vert.count() and n_ts == vert_ts.count()
+
+
+#: Spark jobs one steady-state ``apply_medallion_batch`` may launch on the
+#: fixture below. The code before the fixed-cost cut launched 57 (a
+#: localCheckpoint, a 2-job count() and an append per insert_new, two
+#: isEmpty probes, and a second anti-join of each Gold table); it now
+#: launches 35-36, and AQE re-planning may add one.
+MEDALLION_BATCH_JOB_CEILING = 40
+
+
+def test_medallion_batch_job_ceiling(spark, quotes, tmp_path):
+    """A steady-state micro-batch (every table exists, the batch brings new
+    ticks) stays under a committed Spark-job ceiling: a job count does not
+    move with host load, unlike the batch's wall-clock."""
+    from schwab_elt_etl_pipeline_spark.session import CODEGEN_CACHE_ENTRIES
+    from schwab_elt_etl_pipeline_spark.sources.warehouse import ParquetTable
+    from schwab_elt_etl_pipeline_spark.streaming.pipeline import apply_medallion_batch
+    from schwab_elt_etl_pipeline_spark.testing.jobs import jobs_launched
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(CODEGEN_CACHE_ENTRIES)
+    names = ("opt", "optm", "underlying", "vert", "vert_ts")
+    tables = [ParquetTable(spark, str(tmp_path / n)) for n in names]
+    tick_ms = F.coalesce(F.col("38"), F.col("35"))
+    split = _ms(6, 40)
+    apply_medallion_batch(quotes.filter(tick_ms < split), *tables)
+
+    second = quotes.filter(tick_ms >= split)
+    jobs = jobs_launched(spark, lambda: apply_medallion_batch(second, *tables))
+    assert jobs <= MEDALLION_BATCH_JOB_CEILING
+
+    rows = dict(zip(names, (t.read().count() for t in tables)))
+    assert rows["optm"] == 60  # the whole fixture's Silver marks
+    assert rows["vert"] == 2 and rows["vert_ts"] > 0

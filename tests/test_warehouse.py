@@ -522,3 +522,96 @@ def test_per_table_compression_codec(spark, tmp_path):
         files += [n for n in names if n.endswith(".parquet")]
     assert files and all(".zstd." in n for n in files)
     assert t.read().count() == 200
+
+
+def _staging_dirs(t):
+    import os
+
+    return [d for d in os.listdir(t.path) if d.startswith("_staging_")]
+
+
+def test_insert_new_zero_rows_leaves_files_untouched(spark, table_dir):
+    t = ParquetTable(spark, table_dir)
+    batch = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+    t.insert_new(batch, keys=["k"])
+    version, files = t.current_version(), sorted(t.data_files())
+
+    assert t.insert_new(batch, keys=["k"]) == 0
+    assert t.current_version() == version
+    assert sorted(t.data_files()) == files
+    assert not _staging_dirs(t)
+
+
+def test_insert_new_returns_rows_added_on_create_and_append(spark, table_dir):
+    t = ParquetTable(spark, table_dir)
+    first = spark.range(50).select(F.col("id").alias("k"), (F.col("id") % 7).alias("v"))
+    assert t.insert_new(first.unionByName(first), keys=["k"]) == 50  # create path
+    assert t.read().count() == 50
+
+    second = spark.range(40, 130).select(F.col("id").alias("k"), F.lit(0).cast("long").alias("v"))
+    assert t.insert_new(second.repartition(3), keys=["k"]) == 80  # append path
+    assert t.read().count() == 130
+    assert not _staging_dirs(t)
+
+
+def test_insert_new_partitioned_moves_files_into_partition_dirs(spark, table_dir):
+    import os
+
+    t = ParquetTable(spark, table_dir, partition_by=["d"])
+    t.insert_new(spark.createDataFrame([(1, 0), (2, 1)], "k long, d int"), keys=["k"])
+    assert t.read().count() == 2  # remembers a schema with d: int
+
+    batch = spark.createDataFrame([(2, 1), (3, 1), (4, 2)], "k long, d int")
+    assert t.insert_new(batch, keys=["k"]) == 2
+    vdir = t._version_dir(t.current_version())
+    for f in t.data_files():
+        assert os.path.basename(os.path.dirname(f)) in {"d=0", "d=1", "d=2"}
+    assert len(os.listdir(os.path.join(vdir, "d=2"))) >= 1
+    got = {(r["k"], r["d"]) for r in t.read().collect()}
+    assert got == {(1, 0), (2, 1), (3, 1), (4, 2)}
+    assert t.read().filter(F.col("d") == 2).count() == 1
+
+
+def test_read_after_append_sees_new_rows_through_remembered_schema(spark, table_dir):
+    t = ParquetTable(spark, table_dir)
+    t.insert_new(spark.createDataFrame([(1, "a")], "k long, v string"), keys=["k"])
+    before = t.read()
+    version = t.current_version()
+    assert t._schemas[version] == before.schema
+
+    assert t.insert_new(spark.createDataFrame([(2, "b")], "k long, v string"), keys=["k"]) == 1
+    assert t._schemas[version] == before.schema  # still remembered
+    assert {r["k"]: r["v"] for r in t.read().collect()} == {1: "a", 2: "b"}
+
+
+def test_second_read_of_a_version_launches_no_job(spark, table_dir):
+    """Schema inference costs a Spark job per read; the table infers a
+    version's schema once. Job counts, unlike timings, do not move with
+    host load."""
+    from schwab_elt_etl_pipeline_spark.testing.jobs import jobs_launched
+
+    t = ParquetTable(spark, table_dir)
+    t.overwrite_versioned(spark.createDataFrame([(1, "a")], "k long, v string"))
+    assert jobs_launched(spark, t.read) >= 1  # the inference the memo saves
+    assert jobs_launched(spark, t.read) == 0
+    assert t.read().collect()[0]["v"] == "a"
+
+
+def test_failed_staged_write_leaves_no_staging_dir(spark, table_dir):
+    """A write that raises mid-job must not leave a ``_staging_<uuid>`` dir
+    in the table root (vacuum never removes one) nor touch the table."""
+    t = ParquetTable(spark, table_dir)
+    t.overwrite_versioned(spark.createDataFrame([(1, "a")], "k long, v string"))
+    version, files = t.current_version(), sorted(t.data_files())
+    bad = spark.createDataFrame([(2, "b"), (3, "c")], "k long, v string").withColumn(
+        "v", F.when(F.col("k") == 3, F.raise_error(F.lit("boom"))).otherwise(F.col("v"))
+    )
+
+    with pytest.raises(Exception, match="boom"):
+        t.overwrite_versioned(bad)
+    with pytest.raises(Exception, match="boom"):
+        t.insert_new(bad, keys=["k"])
+    assert not _staging_dirs(t)
+    assert t.current_version() == version
+    assert sorted(t.data_files()) == files
+    assert [tuple(r) for r in t.read().collect()] == [(1, "a")]
