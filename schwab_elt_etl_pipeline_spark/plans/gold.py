@@ -15,13 +15,18 @@ Re-expresses ``SPX.SP_PROCESS_VERTS @D, @MinTime, @W``
      to inner by its WHERE clause; implemented as inner, SURVEY §7.3.5);
   4. outlier flag from 5-row trailing/leading averages per leg pair
      (W1/W2, docs/sql_server.md:484-502);
-  5. VERT definitions: new (SID, LID) pairs with deterministic VID
-     (J3 anti-join, docs/sql_server.md:511-520);
+  5. VERT definitions: distinct (SID, LID) pairs with deterministic VID
+     (docs/sql_server.md:511-520);
   6. net price = short minus long, clamped to [0, W], outliers and
      after-hours rows excluded (F10/P5, docs/sql_server.md:527-546);
   7. 10-row rolling average AVG_R per VID (W3, docs/sql_server.md:562-568);
-  8. MAX-pair dedup per (VID, T) + anti-join against existing VERT_TS
-     (A10/J3, docs/sql_server.md:553-575).
+  8. MAX-pair dedup per (VID, T) (A10, docs/sql_server.md:553-575).
+
+The builders return candidate rows. The reference's J3 anti-joins against
+the existing VERT / VERT_TS (docs/sql_server.md:511-520,553-575) belong to
+the write: the caller hands each output to ``ParquetTable.insert_new`` keyed
+on (SID, LID) and (VID, T), which creates a missing table on its first write
+and otherwise anti-joins once. :func:`gold_scope` is the one build path.
 
 Scale notes: the leg self-join is an equi-join on (T, CP, Expiry) with a
 residual band predicate on strikes — Catalyst plans a shuffled hash join on the
@@ -41,7 +46,7 @@ from pyspark.sql.window import Window
 
 from schwab_elt_etl_pipeline_spark.functions.scalars import clamp
 from schwab_elt_etl_pipeline_spark.operators.gapfill import gapfill_locf
-from schwab_elt_etl_pipeline_spark.operators.merge import insert_new, surrogate_key
+from schwab_elt_etl_pipeline_spark.operators.merge import surrogate_key
 from schwab_elt_etl_pipeline_spark.operators.windows import with_outlier_flag
 from schwab_elt_etl_pipeline_spark.plans.silver import MARKET_CLOSE
 
@@ -146,36 +151,30 @@ def pair_legs(dense: DataFrame, width: int) -> DataFrame:
     )
 
 
-def build_verts(
-    pairs: DataFrame, width: int, vert: DataFrame | None = None
-) -> DataFrame:
-    """J3: new VERT definitions — distinct (SID, LID) pairs not already defined
+def build_verts(pairs: DataFrame, width: int) -> DataFrame:
+    """VERT definitions — the distinct (SID, LID) pairs of ``pairs``
     (docs/sql_server.md:511-520). VID = xxhash64(SID, LID) (SURVEY §4.2)."""
-    defs = (
+    return (
         pairs.select("SID", "LID", "SS", "CP", "Expiry")
         .distinct()
         .withColumn("W", F.lit(width))
         .withColumn("VID", surrogate_key("SID", "LID"))
         .select("VID", "SID", "LID", "SS", "W", "CP", "Expiry")
     )
-    if vert is None:
-        return defs
-    return insert_new(defs, vert, keys=["SID", "LID"])
 
 
 def build_vert_ts(
     pairs: DataFrame,
     vert: DataFrame,
     width: int,
-    vert_ts: DataFrame | None = None,
     outlier_threshold: float = 0.5,
 ) -> DataFrame:
     """Steps 4, 6-8: priced spread series (docs/sql_server.md:484-575).
 
     Net price ``O = short − long`` clamped to [0, W]; rows flagged as outliers
     (OI=1) are excluded (docs/sql_server.md:541-542); AVG_R is the 10-row
-    rolling average per VID; final MAX-pair dedup per (VID, T) and anti-join
-    against the existing VERT_TS keep the insert idempotent.
+    rolling average per VID; a final MAX-pair dedup leaves one row per
+    (VID, T).
     """
     priced = pairs.withColumn("NET", F.col("SO") - F.col("LO"))
     flagged = with_outlier_flag(
@@ -192,45 +191,11 @@ def build_vert_ts(
     rolled = clean.withColumn(
         "AVG_R", F.avg(F.col("O").cast("double")).over(w_roll).cast("decimal(9,2)")
     )
-    final = (
+    return (
         rolled.groupBy("VID", "T")
         .agg(F.max("O").alias("O"), F.max("AVG_R").alias("AVG_R"))  # A10
         .select("VID", "T", "O", "AVG_R")
     )
-    if vert_ts is None:
-        return final
-    return insert_new(final, vert_ts, keys=["VID", "T"])
-
-
-def run_gold(
-    optm: DataFrame,
-    opt: DataFrame,
-    underlying: DataFrame,
-    min_time: dt.datetime,
-    width: int,
-    opt_range: int = 100,
-    vert: DataFrame | None = None,
-    vert_ts: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Full ``SP_PROCESS_VERTS`` pass → (VERT, VERT_TS) updated tables.
-
-    ``underlying`` carries ($SPX) marks with columns (T, Mark).
-
-    Lazy one-shot variant: within a single consuming action AQE's
-    ReuseExchange dedups the diamond subtrees, so nothing is persisted and no
-    storage memory is retained. A consumer that runs SEVERAL actions over the
-    outputs (e.g. writing VERT then VERT_TS) should use :func:`gold_scope`,
-    which persists the diamonds for the duration of the block and releases
-    them on exit.
-    """
-    lo, hi = strike_range(underlying, min_time)
-    dense = densify_legs(optm, opt, min_time, lo - opt_range, hi + opt_range)
-    pairs = pair_legs(dense, width)
-    new_vert = build_verts(pairs, width, vert)
-    vert_all = new_vert if vert is None else vert.unionByName(new_vert)
-    new_ts = build_vert_ts(pairs, vert_all, width, vert_ts)
-    ts_all = new_ts if vert_ts is None else vert_ts.unionByName(new_ts)
-    return vert_all, ts_all
 
 
 @contextlib.contextmanager
@@ -242,17 +207,20 @@ def gold_scope(
     width: int,
     opt_range: int = 100,
 ):
-    """Persist-hygienic ``SP_PROCESS_VERTS``: yields the day's (VERT,
-    VERT_TS) rows — every spread definition and every priced (VID, T) row
-    the day produces, not yet anti-joined against existing tables. The
-    caller hands each straight to ``ParquetTable.insert_new``, whose
-    anti-join is then the only one. The diamond intermediates (dense legs;
-    leg pairs — each consumed by both writes) are persisted for the
-    duration of the block and UNPERSISTED on exit. Run every consuming
-    action (writes/collects) inside the block. On a long-running driver
-    (the streaming Gold maintenance loop calls this once per touched day
-    per micro-batch) un-released caches would accumulate storage memory
-    without bound — this scope is the discipline that prevents it.
+    """``SP_PROCESS_VERTS`` for one day: yields the day's (VERT, VERT_TS)
+    rows — every spread definition and every priced (VID, T) row the day
+    produces, not yet anti-joined against existing tables. The caller
+    (the streaming pipeline and the backfill, through
+    ``apply_medallion_batch``) hands each straight to
+    ``ParquetTable.insert_new``, whose anti-join is then the only one.
+
+    The diamond intermediates (dense legs; leg pairs — each consumed by
+    both writes) are persisted for the duration of the block and
+    UNPERSISTED on exit. Run every consuming action (writes/collects)
+    inside the block. On a long-running driver (the streaming Gold
+    maintenance loop calls this once per touched day per micro-batch)
+    un-released caches would accumulate storage memory without bound —
+    this scope is the discipline that prevents it.
     """
     lo, hi = strike_range(underlying, min_time)
     dense = densify_legs(optm, opt, min_time, lo - opt_range, hi + opt_range).persist()

@@ -75,10 +75,13 @@ def parse_underlying(quotes: DataFrame) -> DataFrame:
 
 
 def build_opt(parsed: DataFrame, opt: DataFrame | None = None) -> DataFrame:
-    """Step 3: contract master upsert — returns the NEW rows to append.
+    """Step 3: contract master upsert — the batch's distinct contracts.
 
-    ``opt`` is the existing master (None → empty). OPT_ID is
-    ``xxhash64(Strike, CP, Expiry)`` (stable across runs; SURVEY §4.2).
+    OPT_ID is ``xxhash64(Strike, CP, Expiry)`` (stable across runs; SURVEY
+    §4.2). With ``opt`` (the existing master as a DataFrame) only the
+    contracts it lacks are returned. A warehouse writer passes no ``opt``:
+    ``ParquetTable.insert_new`` keyed on (Strike, CP, Expiry) does the
+    anti-join itself.
     """
     contracts = (
         parsed.select("Strike", "CP", "Expiry")
@@ -114,21 +117,18 @@ def build_optm_increment(
     )
 
 
-def merge_optm(increment: DataFrame, optm: DataFrame | None = None) -> DataFrame:
-    """Insert-only MERGE on (OPT_ID, T) (J7, docs/sql_server.md:317-329)."""
-    if optm is None:
-        return increment
-    return merge_upsert(increment, optm, keys=["OPT_ID", "T"], insert_only=True)
-
-
 def run_silver(
     quotes: DataFrame,
     opt: DataFrame | None = None,
     optm: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Full Silver pass: returns the updated (OPT, OPTM) tables."""
+    """Full Silver pass: returns the updated (OPT, OPTM) tables; OPTM is
+    an insert-only MERGE on (OPT_ID, T) (J7, docs/sql_server.md:317-329)."""
     parsed = parse_quotes(quotes)
     new_opt = build_opt(parsed, opt)
     opt_all = new_opt if opt is None else opt.unionByName(new_opt)
     increment = build_optm_increment(parsed, opt_all)
-    return opt_all, merge_optm(increment, optm)
+    if optm is None:
+        return opt_all, increment
+    merged = merge_upsert(increment, optm, keys=["OPT_ID", "T"], insert_only=True)
+    return opt_all, merged

@@ -24,7 +24,10 @@ up incrementally. This module runs the batch curation operators
   work per trigger, exactly how an at-scale dedup service amortizes LSH.
 - ``update_simhash_index``: the pigeonhole-blocked sibling of the MinHash
   index — same probe-don't-rescan protocol on (block, key) buckets, with
-  SimHash's deterministic recall guarantee (Hamming ≤ blocks-1).
+  SimHash's deterministic recall guarantee (Hamming ≤ blocks-1). MinHash,
+  SimHash and the pHash / audio / video indexes run ONE definition of the
+  protocol, ``_update_blocked_hash_index``, differing only in the equi-key
+  and the score column.
 - ``update_passage_index``: incremental SUB-document dedup — the streaming
   twin of ``operators/dedup.py passage_dedup_rebuild``, probing a persistent
   passage-fingerprint table so cross-batch boilerplate is dropped with
@@ -56,11 +59,17 @@ up incrementally. This module runs the batch curation operators
   Cadence: run it whenever the version/file count grows past the probe
   budget (e.g. every N thousand epochs), and ONLY for epochs the streaming
   checkpoint has committed past (see the function docstring).
+
+Every index append goes through ``ParquetTable.insert_new``, which creates a
+missing table on its first write (deduplicating on the keys) and otherwise
+anti-joins on them, so no append forks on ``exists()``; reads still do. The
+PQ, IVFADC and SemDeDup first batches also train fixed structures
+(codebooks, centroids); those seed writes use ``overwrite_versioned``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -214,47 +223,18 @@ def update_minhash_index(
         eager=True
     )
 
-    def _pairs(left, right, residual):
-        return (
-            left.alias("a")
-            .join(
-                right.alias("b"),
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & residual,
-            )
-            .select(
-                F.col("a.id").alias("batch_id"),
-                F.col("b.id").alias("index_id"),
-                (
-                    F.size(
-                        F.filter(
-                            F.zip_with(
-                                "a.sig", "b.sig", lambda x, y: (x == y).cast("int")
-                            ),
-                            lambda v: v == 1,
-                        )
-                    )
-                    / F.lit(k)
-                ).alias("est_jaccard"),
-            )
+    est_jaccard = F.size(
+        F.filter(
+            F.zip_with("a.sig", "b.sig", lambda x, y: (x == y).cast("int")),
+            lambda v: v == 1,
         )
-
-    # pairs ARRIVING TOGETHER: the index cannot see them (both sides are
-    # appended only after this call), so the batch must self-join its own
-    # bands — without this, two near-identical docs in one micro-batch are
-    # never surfaced by ANY call (the index-only probe misses them now, and
-    # later batches probe against both as index rows, never as a pair)
-    self_cands = _pairs(signed, signed, F.col("a.id") < F.col("b.id"))
-    if index.exists():
-        probed = _pairs(signed, index.read(), F.col("a.id") != F.col("b.id"))
-        cands = probed.unionByName(self_cands).dropDuplicates(
-            ["batch_id", "index_id"]
-        )
-        index.insert_new(signed, keys=["id", "band"])
-        return cands
-    index.overwrite_versioned(signed)
-    return self_cands.dropDuplicates(["batch_id", "index_id"])
+    ) / F.lit(k)
+    return _update_blocked_hash_index(
+        signed,
+        index,
+        on=("band", "bucket"),
+        score=est_jaccard.alias("est_jaccard"),
+    )
 
 
 def update_simhash_index(
@@ -269,7 +249,8 @@ def update_simhash_index(
     (``operators/dedup.py simhash_blocked``): the 64-bit signature cut into
     ``blocks`` chunks, a pair surfacing when ANY chunk collides — guaranteed
     recall for Hamming ≤ blocks-1 (pigeonhole), incremental cost O(batch).
-    Protocol mirrors ``update_minhash_index``: sign only the batch, probe the
+    Same protocol as ``update_minhash_index`` (the shared
+    ``_update_blocked_hash_index``): sign only the batch, probe the
     pre-bucketed index on the (block, key) equi-key, self-join the batch for
     pairs arriving together, then append idempotently on (id, block).
 
@@ -278,37 +259,7 @@ def update_simhash_index(
     signed = simhash_blocked(
         batch, id_col="doc_id", text_col="text", blocks=blocks
     ).localCheckpoint(eager=True)
-
-    def _pairs(left, right, residual):
-        return (
-            left.alias("a")
-            .join(
-                right.alias("b"),
-                (F.col("a.block") == F.col("b.block"))
-                & (F.col("a.key") == F.col("b.key"))
-                & residual,
-            )
-            .select(
-                F.col("a.id").alias("batch_id"),
-                F.col("b.id").alias("index_id"),
-                F.bit_count(
-                    F.col("a.sig").bitwiseXOR(F.col("b.sig"))
-                ).alias("hamming"),
-            )
-        )
-
-    # same-batch pairs: both sides enter the index only after this call, so
-    # the index probe alone would never surface them (see minhash twin)
-    self_cands = _pairs(signed, signed, F.col("a.id") < F.col("b.id"))
-    if index.exists():
-        probed = _pairs(signed, index.read(), F.col("a.id") != F.col("b.id"))
-        cands = probed.unionByName(self_cands).dropDuplicates(
-            ["batch_id", "index_id"]
-        )
-        index.insert_new(signed, keys=["id", "block"])
-        return cands
-    index.overwrite_versioned(signed)
-    return self_cands.dropDuplicates(["batch_id", "index_id"])
+    return _update_blocked_hash_index(signed, index)
 
 
 def update_phash_index(
@@ -343,44 +294,56 @@ def update_phash_index(
 
 
 def _update_blocked_hash_index(
-    signed: DataFrame, index: ParquetTable, hash_col: str
+    signed: DataFrame,
+    index: ParquetTable,
+    hash_col: str = "sig",
+    on: tuple[str, str] = ("block", "key"),
+    score: Column | None = None,
 ) -> DataFrame:
-    """Shared probe-then-append protocol for every pigeonhole-blocked
-    Hamming index (pHash images, audio fingerprints): the batch's
-    pre-blocked (id, <hash_col>, block, key) rows self-join, probe the
-    persisted index on the (block, key) equi-key, and append idempotently
-    on (id, block). One definition, so the image and audio twins cannot
-    drift from each other or from ``operators/phash.py
-    blocked_hamming_pairs``."""
+    """Shared probe-then-append protocol for every banded or blocked pair
+    index (MinHash bands, SimHash blocks, pHash images, audio
+    fingerprints): the batch's signed rows self-join, probe the persisted
+    index on the ``on`` equi-key, and append idempotently on
+    (id, ``on[0]``) through ``insert_new``, which also creates the index on
+    its first write. ``score`` is the pair's similarity column over the
+    ``a`` (batch) and ``b`` (index) sides; the default is the ``hamming``
+    distance of ``hash_col``. One definition, so the family cannot drift
+    from itself or from ``operators/phash.py blocked_hamming_pairs``.
+    Output: ``(batch_id, index_id, <score>)``."""
+    if score is None:
+        score = F.bit_count(
+            F.col(f"a.{hash_col}").bitwiseXOR(F.col(f"b.{hash_col}"))
+        ).alias("hamming")
+
+    c1, c2 = on
 
     def _pairs(left, right, residual):
         return (
             left.alias("a")
             .join(
                 right.alias("b"),
-                (F.col("a.block") == F.col("b.block"))
-                & (F.col("a.key") == F.col("b.key"))
+                (F.col(f"a.{c1}") == F.col(f"b.{c1}"))
+                & (F.col(f"a.{c2}") == F.col(f"b.{c2}"))
                 & residual,
             )
             .select(
                 F.col("a.id").alias("batch_id"),
                 F.col("b.id").alias("index_id"),
-                F.bit_count(
-                    F.col(f"a.{hash_col}").bitwiseXOR(F.col(f"b.{hash_col}"))
-                ).alias("hamming"),
+                score,
             )
         )
 
-    self_cands = _pairs(signed, signed, F.col("a.id") < F.col("b.id"))
+    # pairs ARRIVING TOGETHER: the index cannot see them (both sides are
+    # appended only after this call), so the batch self-joins its own rows —
+    # without this, two near-identical docs in one micro-batch are never
+    # surfaced by ANY call (the index-only probe misses them now, and later
+    # batches probe against both as index rows, never as a pair)
+    cands = _pairs(signed, signed, F.col("a.id") < F.col("b.id"))
     if index.exists():
         probed = _pairs(signed, index.read(), F.col("a.id") != F.col("b.id"))
-        cands = probed.unionByName(self_cands).dropDuplicates(
-            ["batch_id", "index_id"]
-        )
-        index.insert_new(signed, keys=["id", "block"])
-        return cands
-    index.overwrite_versioned(signed)
-    return self_cands.dropDuplicates(["batch_id", "index_id"])
+        cands = probed.unionByName(cands)
+    index.insert_new(signed, keys=["id", c1])
+    return cands.dropDuplicates(["batch_id", "index_id"])
 
 
 def update_afp_index(
@@ -504,7 +467,7 @@ def update_ann_index(
         as_double(vec_col).alias("vec"),
     ).withColumn("bucket", sign_bucket(F.col("vec"), bits)).localCheckpoint(eager=True)
     if not index.exists():
-        index.overwrite_versioned(signed)
+        index.insert_new(signed, keys=["id"])
         return signed.select(
             F.col("id").alias("batch_id"),
             F.col("id").alias("index_id"),
@@ -706,10 +669,7 @@ def update_url_index(
         "first_doc",
         (F.col("doc_id") != F.col("first_doc")).alias("is_dup"),
     ).unionByName(quarantined)
-    if index.exists():
-        index.insert_new(merged, keys=["canonical_url"])
-    else:
-        index.overwrite_versioned(merged)
+    index.insert_new(merged, keys=["canonical_url"])
     return verdicts
 
 
@@ -1098,8 +1058,5 @@ def update_semdedup_index(
         # checkpoint is cheap.)
         .localCheckpoint(eager=True)
     )
-    if index.exists():
-        index.insert_new(assigned, keys=["vec_id"])
-    else:
-        index.overwrite_versioned(assigned)
+    index.insert_new(assigned, keys=["vec_id"])
     return verdicts

@@ -34,26 +34,33 @@ def run_streaming_silver(
 ) -> StreamingQuery:
     """Maintain OPT + OPTM incrementally from a tick stream.
 
-    Per micro-batch: parse/filter ticks (P3/P4/P9, F2/F4), insert-new
-    contracts into OPT (J3), resolve OPT_ID (broadcast J4), MAX-dedup marks
-    (A7) and insert-new into OPTM (J7 insert-only) — all set-based, so a
-    replayed batch inserts zero rows.
+    Per micro-batch: parse/filter ticks (P3/P4/P9, F2/F4), then the shared
+    Silver step :func:`_apply_silver` — insert-new contracts into OPT (J3),
+    resolve OPT_ID (broadcast J4), MAX-dedup marks (A7) and insert-new into
+    OPTM (J7 insert-only). All set-based, so a replayed batch inserts zero
+    rows. An empty batch writes nothing.
     """
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         parsed = parse_quotes(batch)
         if parsed.isEmpty():
             return
-        if opt_table.exists():
-            new_opt = build_opt(parsed, opt_table.read())
-            opt_table.insert_new(new_opt, keys=["Strike", "CP", "Expiry"])
-        else:
-            opt_table.overwrite_versioned(build_opt(parsed))
-        increment = build_optm_increment(parsed, opt_table.read())
-        optm_table.insert_new(increment, keys=["OPT_ID", "T"])
+        _apply_silver(parsed, opt_table, optm_table)
 
     return start_foreach_batch(
         quotes_stream, process_batch, checkpoint_dir, trigger_seconds
+    )
+
+
+def _apply_silver(
+    parsed: DataFrame, opt_table: ParquetTable, optm_table: ParquetTable
+) -> None:
+    """The Silver step of one batch of parsed option ticks. Each write is
+    ``insert_new``, which creates a missing table on its first write and
+    otherwise anti-joins on the key — the only anti-join each row meets."""
+    opt_table.insert_new(build_opt(parsed), keys=["Strike", "CP", "Expiry"])
+    optm_table.insert_new(
+        build_optm_increment(parsed, opt_table.read()), keys=["OPT_ID", "T"]
     )
 
 
@@ -132,15 +139,7 @@ def apply_medallion_batch(
     if has_und:
         underlying_table.insert_new(und, keys=["T"])
     if has_parsed:
-        if opt_table.exists():
-            opt_table.insert_new(
-                build_opt(parsed, opt_table.read()), keys=["Strike", "CP", "Expiry"]
-            )
-        else:
-            opt_table.overwrite_versioned(build_opt(parsed))
-        optm_table.insert_new(
-            build_optm_increment(parsed, opt_table.read()), keys=["OPT_ID", "T"]
-        )
+        _apply_silver(parsed, opt_table, optm_table)
 
     if not underlying_table.exists() or not optm_table.exists():
         return  # Gold needs both marks and an $SPX strike range

@@ -8,6 +8,7 @@ deliberate duplicates (A7 MAX dedup), out-of-session rows (P5), null marks
 from __future__ import annotations
 
 import datetime as dt
+import re
 from decimal import Decimal
 
 import pytest
@@ -85,15 +86,15 @@ def test_gold_verticals(spark, quotes):
     opt, optm = silver.run_silver(quotes)
     underlying = silver_underlying(quotes)
     min_time = dt.datetime(2024, 6, 17, 6, 30)
-    vert, vert_ts = gold.run_gold(
+    with gold.gold_scope(
         optm, opt, underlying, min_time=min_time, width=5, opt_range=100
-    )
-    verts = vert.collect()
+    ) as (vert, vert_ts):
+        verts = vert.collect()
+        ts = vert_ts.orderBy("VID", "T").collect()
     # strikes 5500/5505/5510 calls, W=5 → (5500,5505) and (5505,5510) spreads
     assert {(r["SS"], r["W"]) for r in verts} == {(5500, 5), (5505, 5)}
     assert all(r["CP"] == 1 for r in verts)
 
-    ts = vert_ts.orderBy("VID", "T").collect()
     assert len(ts) > 0
     # clamp invariant: 0 <= O <= W
     assert all(Decimal("0") <= r["O"] <= Decimal("5") for r in ts)
@@ -105,14 +106,6 @@ def test_gold_verticals(spark, quotes):
     vid_5500 = [r for r in ts if any(
         v["VID"] == r["VID"] and v["SS"] == 5500 for v in verts)]
     assert all(r["O"] <= Decimal("2.50") for r in vid_5500)
-
-    # idempotent re-run produces no new rows
-    vert2, vert_ts2 = gold.run_gold(
-        optm, opt, underlying, min_time=min_time, width=5, opt_range=100,
-        vert=vert, vert_ts=vert_ts,
-    )
-    assert vert2.count() == vert.count()
-    assert vert_ts2.count() == vert_ts.count()
 
 
 def silver_underlying(quotes):
@@ -138,11 +131,11 @@ def test_gold_with_second_precision_ticks(spark):
     quotes = spark.createDataFrame(rows, QUOTES_STREAM)
     opt, optm = silver.run_silver(quotes)
     underlying = silver_underlying(quotes)
-    vert, vert_ts = gold.run_gold(
+    with gold.gold_scope(
         optm, opt, underlying,
         min_time=dt.datetime(2024, 6, 17, 6, 30), width=5, opt_range=100,
-    )
-    ts = vert_ts.collect()
+    ) as (_vert, vert_ts):
+        ts = vert_ts.collect()
     assert len(ts) > 0
     # both legs ramp in lockstep → every non-null spread price is 2.00
     priced = [r["O"] for r in ts if r["O"] is not None]
@@ -152,7 +145,7 @@ def test_gold_with_second_precision_ticks(spark):
 def test_strike_range_falls_back_when_window_empty(spark):
     """Underlying marks all AFTER min_time+2h: the 2-hour window aggregate is
     Row(None, None); strike_range must fall back to the full series instead
-    of returning None and crashing run_gold's lo-opt_range arithmetic."""
+    of returning None and crashing gold_scope's lo-opt_range arithmetic."""
     rows = [
         (_ms(9, 0), "$SPX", None, None, 5500.0, _ms(9, 0)),
         (_ms(9, 30), "$SPX", None, None, 5510.0, _ms(9, 30)),
@@ -173,9 +166,9 @@ def _persistent_rdd_ids(spark):
 
 @pytest.mark.slow  # r13 verdict #2 re-tier: >=9 s property/reference test; close-gate full suite still runs it
 def test_gold_scope_releases_caches(spark, quotes):
-    """gold_scope must leave NO retained RDD blocks after exit, and run_gold
-    must not persist at all — the persist-hygiene contract for the streaming
-    hot loop (storage memory may not accumulate across micro-batches).
+    """gold_scope must leave NO retained RDD blocks after exit — the
+    persist-hygiene contract for the streaming hot loop (storage memory may
+    not accumulate across micro-batches).
 
     The assertion is on the DELTA of persistent RDD ids, not the absolute
     count: the session is shared across the whole suite and earlier tests
@@ -188,22 +181,17 @@ def test_gold_scope_releases_caches(spark, quotes):
     underlying = silver_underlying(quotes)
     min_time = dt.datetime(2024, 6, 17, 6, 30)
 
-    vert, vert_ts = gold.run_gold(
-        optm, opt, underlying, min_time=min_time, width=5, opt_range=100
-    )
-    vert.collect()
-    assert _persistent_rdd_ids(spark) - baseline == set()
-
     with gold.gold_scope(
         optm, opt, underlying, min_time=min_time, width=5, opt_range=100
     ) as (v_all, ts_all):
-        n_vert, n_ts = v_all.count(), ts_all.count()
-        assert n_vert > 0 and n_ts > 0
+        n_vert = v_all.count()
+        prices = [r["O"] for r in ts_all.select("O").collect()]
         assert len(_persistent_rdd_ids(spark) - baseline) > 0  # in scope
     assert _persistent_rdd_ids(spark) - baseline == set()  # released
 
-    # scope output matches the lazy variant
-    assert n_vert == vert.count() and n_ts == vert_ts.count()
+    # the fixture's two spreads, and a non-empty VERT_TS clamped to [0, W]
+    assert n_vert == 2
+    assert prices and all(Decimal("0") <= o <= Decimal("5") for o in prices)
 
 
 #: Spark jobs one steady-state ``apply_medallion_batch`` may launch on the
@@ -214,26 +202,51 @@ def test_gold_scope_releases_caches(spark, quotes):
 MEDALLION_BATCH_JOB_CEILING = 40
 
 
-def test_medallion_batch_job_ceiling(spark, quotes, tmp_path):
-    """A steady-state micro-batch (every table exists, the batch brings new
-    ticks) stays under a committed Spark-job ceiling: a job count does not
-    move with host load, unlike the batch's wall-clock."""
-    from schwab_elt_etl_pipeline_spark.session import CODEGEN_CACHE_ENTRIES
+def _steady_state(spark, quotes, tmp_path):
+    """The five medallion tables after a first batch (the fixture's ticks
+    before 06:40), and the steady-state batch that follows (every table
+    exists, the batch brings new ticks)."""
     from schwab_elt_etl_pipeline_spark.sources.warehouse import ParquetTable
     from schwab_elt_etl_pipeline_spark.streaming.pipeline import apply_medallion_batch
-    from schwab_elt_etl_pipeline_spark.testing.jobs import jobs_launched
 
-    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(CODEGEN_CACHE_ENTRIES)
     names = ("opt", "optm", "underlying", "vert", "vert_ts")
     tables = [ParquetTable(spark, str(tmp_path / n)) for n in names]
     tick_ms = F.coalesce(F.col("38"), F.col("35"))
     split = _ms(6, 40)
     apply_medallion_batch(quotes.filter(tick_ms < split), *tables)
+    return dict(zip(names, tables)), quotes.filter(tick_ms >= split)
 
-    second = quotes.filter(tick_ms >= split)
-    jobs = jobs_launched(spark, lambda: apply_medallion_batch(second, *tables))
+
+def test_medallion_batch_job_ceiling(spark, quotes, tmp_path):
+    """A steady-state micro-batch stays under a committed Spark-job ceiling:
+    a job count does not move with host load, unlike the batch's
+    wall-clock."""
+    from schwab_elt_etl_pipeline_spark.session import CODEGEN_CACHE_ENTRIES
+    from schwab_elt_etl_pipeline_spark.streaming.pipeline import apply_medallion_batch
+    from schwab_elt_etl_pipeline_spark.testing.jobs import jobs_launched
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(CODEGEN_CACHE_ENTRIES)
+    tables, second = _steady_state(spark, quotes, tmp_path)
+    jobs = jobs_launched(spark, lambda: apply_medallion_batch(second, *tables.values()))
     assert jobs <= MEDALLION_BATCH_JOB_CEILING
 
-    rows = dict(zip(names, (t.read().count() for t in tables)))
+    rows = {name: t.read().count() for name, t in tables.items()}
     assert rows["optm"] == 60  # the whole fixture's Silver marks
     assert rows["vert"] == 2 and rows["vert_ts"] > 0
+
+
+def test_medallion_opt_write_anti_joins_once(spark, quotes, tmp_path, monkeypatch):
+    """A steady-state batch's OPT write meets ONE anti-join against ONE
+    scan of OPT: ``build_opt`` returns the batch's contracts and
+    ``ParquetTable.insert_new`` alone anti-joins them on the key."""
+    from schwab_elt_etl_pipeline_spark.streaming.pipeline import apply_medallion_batch
+
+    tables, second = _steady_state(spark, quotes, tmp_path)
+    staged, stage = [], tables["opt"]._stage
+    monkeypatch.setattr(tables["opt"], "_stage", lambda df: staged.append(df) or stage(df))
+    apply_medallion_batch(second, *tables.values())
+
+    (df,) = staged
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Join LeftAnti") == 1
+    assert len(re.findall(r"Relation \[OPT_ID#\d+L?,Strike#\d+,CP#\d+,Expiry#\d+\]", plan)) == 1

@@ -268,6 +268,32 @@ def test_incremental_passage_index_matches_batch_semantics(spark, dirs):
     assert all(v == 0 for v in out2_later.values())
 
 
+def test_minhash_index_first_write_keeps_one_row_per_band(spark, dirs):
+    """A first batch that carries one document twice commits one index row
+    per (id, band) — the rows an append into an existing index keeps —
+    because the first write goes through the same keyed ``insert_new``."""
+    _, idx_dir, _ = dirs
+    text = "alpha beta gamma delta epsilon zeta eta theta"
+    twice = spark.createDataFrame([_doc(1, text), _doc(1, text)], _SCHEMA)
+
+    first = ParquetTable(spark, f"{idx_dir}/first")
+    update_minhash_index(twice, first)
+    appended = ParquetTable(spark, f"{idx_dir}/appended")
+    update_minhash_index(
+        spark.createDataFrame([_doc(2, "one two three four five six seven")], _SCHEMA),
+        appended,
+    )
+    update_minhash_index(twice, appended)
+
+    def _rows(df):
+        return sorted(tuple(r) for r in df.filter(F.col("id") == 1).collect())
+
+    rows = _rows(first.read())
+    assert len(rows) == 16  # the default 16 bands, each once
+    assert len({(i, band) for i, _sig, band, _bucket in rows}) == 16
+    assert rows == _rows(appended.read())
+
+
 def test_minhash_same_batch_pairs_are_surfaced(spark, dirs):
     """Two near-identical docs ARRIVING IN THE SAME micro-batch must appear
     as a candidate pair in that call — the index-only probe cannot see them
