@@ -507,6 +507,33 @@ def update_ann_index(
     return cands
 
 
+def _probe_seen(
+    df: DataFrame, index: ParquetTable, key: str, epoch: int | None
+) -> DataFrame:
+    """``df`` plus ``_seen``: whether its ``key`` is already claimed in ``index``.
+
+    The epoch-aware probe of the fingerprint indexes (passage, window, gram),
+    whose rows carry the ``_epoch`` that claimed them. With ``epoch`` (the
+    foreachBatch batch_id) a key claimed BY THIS epoch counts as unseen, so a
+    replayed batch reproduces its original output; rows claimed without an
+    epoch (direct batch use, or folded by :func:`compact_index`) stay seen
+    under every epoch — NULL != epoch is SQL NULL, hence the coalesce.
+    Without ``epoch`` every index hit is seen. O(batch) lookups: a left join
+    of ``df`` against the index's key column, never a corpus rescan.
+    """
+    if not index.exists():
+        return df.withColumn("_seen", F.lit(False))
+    idx = index.read().select(
+        key, F.lit(1).alias("_hit"), F.col("_epoch").alias("_idx_epoch")
+    )
+    seen = F.col("_hit").isNotNull()
+    if epoch is not None:
+        seen = seen & F.coalesce(F.col("_idx_epoch") != F.lit(epoch), F.lit(True))
+    return (
+        df.join(idx, key, "left").withColumn("_seen", seen).drop("_hit", "_idx_epoch")
+    )
+
+
 def update_passage_index(
     batch: DataFrame,
     index: ParquetTable,
@@ -552,17 +579,7 @@ def update_passage_index(
         .localCheckpoint(eager=True)  # feeds the probe, the rebuild AND the
         # index append — materialize once per batch
     )
-    if index.exists():
-        idx = index.read().select(
-            "fp", F.lit(1).alias("_hit"), F.col("_epoch").alias("_idx_epoch")
-        )
-        joined = passages.join(idx, "fp", "left")
-        cond = F.col("_hit").isNull()
-        if epoch is not None:
-            cond = cond | (F.col("_idx_epoch") == F.lit(epoch))
-        fresh = joined.filter(cond).drop("_hit", "_idx_epoch")
-    else:
-        fresh = passages
+    fresh = _probe_seen(passages, index, "fp", epoch).filter(~F.col("_seen"))
     w = Window.partitionBy("fp").orderBy("_id", "passage_id")
     kept = fresh.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") == 1)
     out = (
@@ -718,22 +735,7 @@ def update_window_index(
     wins = raw_wins.select(
         "_id", "start", F.xxhash64("wtext").alias("fp")
     ).localCheckpoint(eager=True)  # probe + rank + index append share it
-    if index.exists():
-        idx = index.read().select(
-            "fp", F.lit(1).alias("_hit"), F.col("_epoch").alias("_idx_epoch")
-        )
-        probed = wins.join(idx, "fp", "left")
-        seen_before = F.col("_hit").isNotNull()
-        if epoch is not None:
-            # NULL-epoch index rows must stay "seen" (NULL != epoch is SQL
-            # NULL and would poison the flag — only a row claimed BY THIS
-            # epoch is fresh on replay)
-            seen_before = seen_before & F.coalesce(
-                F.col("_idx_epoch") != F.lit(epoch), F.lit(True)
-            )
-        probed = probed.withColumn("_seen", seen_before).drop("_hit", "_idx_epoch")
-    else:
-        probed = wins.withColumn("_seen", F.lit(False))
+    probed = _probe_seen(wins, index, "fp", epoch)
     rank = Window.partitionBy("fp").orderBy("_id", "start")
     occ = probed.withColumn("rk", F.row_number().over(rank))
     dup_starts = occ.filter(F.col("_seen") | (F.col("rk") > 1)).select("_id", "start")
@@ -923,21 +925,7 @@ def update_gram_index(
     dg = doc_gram_hashes(batch, n, id_col, text_col).localCheckpoint(
         eager=True  # probe + rank + index append share it
     )
-    if index.exists():
-        idx = index.read().select(
-            "gh", F.lit(1).alias("_hit"), F.col("_epoch").alias("_idx_epoch")
-        )
-        probed = dg.join(idx, "gh", "left")
-        seen_before = F.col("_hit").isNotNull()
-        if epoch is not None:
-            seen_before = seen_before & F.coalesce(
-                F.col("_idx_epoch") != F.lit(epoch), F.lit(True)
-            )
-        probed = probed.withColumn("_seen", seen_before).drop(
-            "_hit", "_idx_epoch"
-        )
-    else:
-        probed = dg.withColumn("_seen", F.lit(False))
+    probed = _probe_seen(dg, index, "gh", epoch)
     rank = Window.partitionBy("gh").orderBy("doc_id")
     occ = probed.withColumn("rk", F.row_number().over(rank))
     out = (

@@ -363,23 +363,32 @@ def test_window_index_matches_batch_operator_and_replays(spark, dirs):
     assert index.read().count() == n_before
 
 
-def test_window_index_null_epoch_rows_stay_seen(spark, dirs):
+@pytest.mark.parametrize(
+    "fn, kwargs, key, expected",
+    [
+        # (doc_id, n_passages, n_kept, deduped_text)
+        ("update_passage_index", {"passage_tokens": 8}, "fp", (1, 1, 0, "")),
+        # (doc_id, n_tokens, n_dropped, deduped_text)
+        ("update_window_index", {"window_tokens": 8}, "fp", (1, 8, 8, "")),
+        # (doc_id, n_grams, n_new, novelty)
+        ("update_gram_index", {"n": 3}, "gh", (1, 6, 0, 0.0)),
+    ],
+    ids=["passage", "window", "gram"],
+)
+def test_null_epoch_index_rows_stay_seen(spark, dirs, fn, kwargs, key, expected):
     """Index rows claimed WITHOUT an epoch (direct batch use) must count as
     seen under any later epoch — NULL != epoch is SQL NULL and an un-coalesced
-    comparison would let previously-indexed duplicate spans through intact."""
-    from schwab_elt_etl_pipeline_spark.streaming.corpus import update_window_index
+    comparison would let previously-indexed duplicates through intact."""
+    from schwab_elt_etl_pipeline_spark.streaming import corpus
 
     _, idx_dir, _ = dirs
-    index = ParquetTable(spark, f"{idx_dir}_nullep", cluster_by=("fp",))
+    index = ParquetTable(spark, f"{idx_dir}_nullep", cluster_by=(key,))
     text = "a b c d e f g h"
     b1 = spark.createDataFrame([(0, text)], "doc_id long, text string")
     b2 = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    update_window_index(b1, index, window_tokens=8, epoch=None).collect()
-    out = {
-        r["doc_id"]: (r["n_dropped"], r["deduped_text"])
-        for r in update_window_index(b2, index, window_tokens=8, epoch=5).collect()
-    }
-    assert out == {1: (8, "")}
+    update = getattr(corpus, fn)
+    update(b1, index, epoch=None, **kwargs).collect()
+    assert [tuple(r) for r in update(b2, index, epoch=5, **kwargs).collect()] == [expected]
 
 
 # ---------------------------------------------------------------------------
