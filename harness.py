@@ -30,6 +30,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import shutil
 import sys
 import tempfile
@@ -70,6 +71,27 @@ sides, two `HashAggregate` levels around each exchange (map-side combine),
 `*(n)` whole-stage-codegen spans over the scalar pipelines, and no
 `CartesianProduct` / `BatchEvalPython` anywhere.
 """
+
+
+#: Ids Spark hands out in run order: whole-stage codegen ``*(n)`` and AQE
+#: ``...QueryStage n`` (stage completion order), exchange ``plan_id=n`` and
+#: expression ``name#n`` ids (session-global counters).
+_RUN_ORDER_IDS = [
+    re.compile(r"(?<=\*\()\d+(?=\))"),
+    re.compile(r"(?<=QueryStage )\d+"),
+    re.compile(r"(?<=plan_id=)\d+"),
+    re.compile(r"(?<=\w#)\d+"),
+]
+
+
+def stable_plan(plan: str) -> str:
+    """``plan`` with each kind of run-order id renumbered by first
+    appearance, so unchanged code writes the same text on every run; the
+    numbers that belong to the plan (literals, partition counts) stay."""
+    for pattern in _RUN_ORDER_IDS:
+        ids: dict[str, str] = {}
+        plan = pattern.sub(lambda m: ids.setdefault(m.group(), str(len(ids) + 1)), plan)
+    return plan
 
 
 def select(registry: list, names: list[str]) -> list:
@@ -169,7 +191,7 @@ def plans(
             qe = df._jdf.queryExecution()
             if suffix is None:
                 df.collect()  # finalize AQE so the isFinalPlan=true plan is captured
-                plan = qe.executedPlan().toString()
+                plan = stable_plan(qe.executedPlan().toString())
                 text[spec.name] = plan if len(plan) <= 9000 else plan[:9000] + "\n... [truncated]"
             else:
                 text[spec.name] = df._sc._jvm.PythonSQLUtils.explainString(qe, "formatted")

@@ -737,6 +737,35 @@ def build_pq_index(
     codes_table.overwrite_versioned(codes)
 
 
+def _unclaimed_codes(codes_table, exclude_epoch: int | None) -> DataFrame:
+    """The code rows a query may see: all of them, or those
+    ``exclude_epoch`` did not claim (``streaming/epochs.py``)."""
+    codes = codes_table.read()
+    if exclude_epoch is None:  # a batch query: the streaming package stays unloaded
+        return codes
+    from schwab_elt_etl_pipeline_spark.streaming.epochs import exclude_own
+
+    return exclude_own(codes, exclude_epoch)
+
+
+def _stamp_codes(
+    codes: DataFrame, codes_table, epoch: int | None, bootstrap: str
+) -> DataFrame:
+    """``codes`` stamped with ``epoch`` when the code table carries the
+    stamp; ``epoch`` against an unstamped (batch-built) table is an error
+    rather than a silent schema fork."""
+    from schwab_elt_etl_pipeline_spark.streaming.epochs import is_stamped, stamp
+
+    if is_stamped(codes_table.read()):
+        return stamp(codes, epoch)
+    if epoch is not None:
+        raise ValueError(
+            "epoch passed but the codes table carries no epoch stamp — "
+            f"bootstrap the index via streaming/corpus.py {bootstrap}"
+        )
+    return codes
+
+
 def pq_query_index(
     books_table,
     codes_table,
@@ -756,11 +785,7 @@ def pq_query_index(
     always count as indexed, matching the null-safe convention of
     ``update_window_index``."""
     books = books_table.read()
-    codes = codes_table.read()
-    if exclude_epoch is not None and "_epoch" in codes.columns:
-        codes = codes.filter(
-            F.coalesce(F.col("_epoch") != F.lit(exclude_epoch), F.lit(True))
-        )
+    codes = _unclaimed_codes(codes_table, exclude_epoch)
     m = books.select("sub").distinct().count()
     width = len(books.select("centroid").first()["centroid"])
     dim = m * width
@@ -814,14 +839,7 @@ def extend_pq_index(
     width = len(books.select("centroid").first()["centroid"])
     _require_dim(new_vectors, vec_col, m * width, "new vector", strict=True)
     codes = pq_encode(new_vectors, books, m, m * width, id_col, vec_col)
-    has_epoch_col = "_epoch" in codes_table.read().columns
-    if has_epoch_col:
-        codes = codes.withColumn("_epoch", F.lit(epoch).cast("long"))
-    elif epoch is not None:
-        raise ValueError(
-            "epoch passed but the codes table has no _epoch column — "
-            "bootstrap the index via streaming/corpus.py update_pq_index"
-        )
+    codes = _stamp_codes(codes, codes_table, epoch, "update_pq_index")
     codes_table.insert_new(codes, keys=[id_col, "sub"])
 
 
@@ -927,11 +945,7 @@ def ivfadc_query_index(
     always count as indexed)."""
     cents = cents_table.read()
     books = books_table.read()
-    codes = codes_table.read()
-    if exclude_epoch is not None and "_epoch" in codes.columns:
-        codes = codes.filter(
-            F.coalesce(F.col("_epoch") != F.lit(exclude_epoch), F.lit(True))
-        )
+    codes = _unclaimed_codes(codes_table, exclude_epoch)
     m = books.select("sub").distinct().count()
     width = len(books.select("centroid").first()["centroid"])
     dim = m * width
@@ -1011,14 +1025,7 @@ def extend_ivfadc_index(
     codes = pq_encode(residuals, books, m, dim, id_col, "res").join(
         residuals.select(id_col, "cell"), id_col
     )
-    has_epoch_col = "_epoch" in codes_table.read().columns
-    if has_epoch_col:
-        codes = codes.withColumn("_epoch", F.lit(epoch).cast("long"))
-    elif epoch is not None:
-        raise ValueError(
-            "epoch passed but the codes table has no _epoch column — "
-            "bootstrap the index via streaming/corpus.py update_ivfadc_index"
-        )
+    codes = _stamp_codes(codes, codes_table, epoch, "update_ivfadc_index")
     codes_table.insert_new(codes, keys=[id_col, "sub"])
 
 

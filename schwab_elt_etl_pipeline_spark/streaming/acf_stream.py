@@ -6,7 +6,7 @@ back, so the pairs straddling a micro-batch boundary need the user's final
 ``K = max lag`` events from prior batches, not just the final one
 (``markov_stream.py`` is the K=1 special case).
 
-State, both epoch-stamped and ``insert_new``-idempotent:
+State, two epoch-delta ledgers (``streaming/epochs.py``):
 
 - ``tails``: each epoch's per-user last K events
   ``(user_id, ts, event_id, value, _epoch)`` keyed on
@@ -40,26 +40,29 @@ from pyspark.sql.streaming.query import StreamingQuery
 from pyspark.sql.window import Window
 
 from schwab_elt_etl_pipeline_spark.sources.warehouse import ParquetTable
+from schwab_elt_etl_pipeline_spark.streaming.epochs import (
+    consolidate,
+    exclude_own,
+    write_delta,
+)
 from schwab_elt_etl_pipeline_spark.streaming.runner import start_foreach_batch
 
 _DEC = "decimal(12,2)"
 
 
-def _prior_tail(tails: ParquetTable, k: int, epoch: int | None) -> DataFrame:
-    """The K latest prior events per user (current epoch excluded)."""
-    prior = tails.read()
-    if epoch is not None:
-        prior = prior.filter(
-            F.coalesce(F.col("_epoch") != F.lit(epoch), F.lit(True))
-        )
-    w = Window.partitionBy("user_id").orderBy(
-        F.desc("ts"), F.desc("event_id")
-    )
+def _latest(ev: DataFrame, k: int) -> DataFrame:
+    """The K latest events per user."""
+    w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
     return (
-        prior.withColumn("_rk", F.row_number().over(w))
+        ev.withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") <= k)
         .select("user_id", "ts", "event_id", "value")
     )
+
+
+def _prior_tail(tails: ParquetTable, k: int, epoch: int) -> DataFrame:
+    """The K latest prior events per user (current epoch excluded)."""
+    return _latest(exclude_own(tails.read(), epoch), k)
 
 
 def update_acf_moments(
@@ -67,7 +70,8 @@ def update_acf_moments(
     tails: ParquetTable,
     moments: ParquetTable,
     lags: int = 3,
-    epoch: int | None = None,
+    *,
+    epoch: int,
 ) -> None:
     """Merge one micro-batch's lag-pair moment deltas (boundary pairs
     included) and record the batch's per-user last-K tail."""
@@ -107,45 +111,29 @@ def update_acf_moments(
         .select("user_id", "p.lag", "p.yt", "p.yl")
         .filter(F.col("yl").isNotNull())
     )
-    delta = (
-        pairs.groupBy("user_id", "lag")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("yt").alias("s1"),
-            F.sum("yl").alias("s2"),
-            F.sum(F.col("yt") * F.col("yt")).alias("s11"),
-            F.sum(F.col("yl") * F.col("yl")).alias("s22"),
-            F.sum(F.col("yt") * F.col("yl")).alias("s12"),
-        )
-        .withColumn("_epoch", F.lit(epoch).cast("long"))
+    delta = pairs.groupBy("user_id", "lag").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("yt").alias("s1"),
+        F.sum("yl").alias("s2"),
+        F.sum(F.col("yt") * F.col("yt")).alias("s11"),
+        F.sum(F.col("yl") * F.col("yl")).alias("s22"),
+        F.sum(F.col("yt") * F.col("yl")).alias("s12"),
     )
-    moments.insert_new(delta, keys=["user_id", "lag", "_epoch"])
-    wt = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
-    tail = (
-        ev.withColumn("_rk", F.row_number().over(wt))
-        .filter(F.col("_rk") <= lags)
-        .select(
-            "user_id",
-            "ts",
-            "event_id",
-            "value",
-            F.lit(epoch).cast("long").alias("_epoch"),
-        )
-    )
-    tails.insert_new(tail, keys=["user_id", "event_id", "_epoch"])
+    write_delta(moments, delta, ["user_id", "lag"], epoch)
+    write_delta(tails, _latest(ev, lags), ["user_id", "event_id"], epoch)
+
+
+_SUMS = ["n", "s1", "s2", "s11", "s22", "s12"]
+
+
+def _fold_moments(moments: DataFrame) -> DataFrame:
+    return moments.groupBy("user_id", "lag").agg(*[F.sum(c).alias(c) for c in _SUMS])
 
 
 def current_moments(moments: ParquetTable) -> DataFrame:
     """Live per-(user, lag) moment sums — epoch deltas summed out (decimal
     addition is exact, so this equals the single-pass batch sums)."""
-    return moments.read().groupBy("user_id", "lag").agg(
-        F.sum("n").alias("n_pairs"),
-        F.sum("s1").alias("s1"),
-        F.sum("s2").alias("s2"),
-        F.sum("s11").alias("s11"),
-        F.sum("s22").alias("s22"),
-        F.sum("s12").alias("s12"),
-    )
+    return _fold_moments(moments.read()).withColumnRenamed("n", "n_pairs")
 
 
 def acf_from_moments(m: DataFrame) -> DataFrame:
@@ -169,52 +157,20 @@ def acf_from_moments(m: DataFrame) -> DataFrame:
 
 
 def consolidate_tails(tails: ParquetTable, lags: int = 3) -> None:
-    """Collapse the tail history to the K latest rows per user, NULL-epoch.
+    """Collapse the tail history to the K latest base rows per user.
 
-    Without compaction the tails table holds up to K rows per (user, epoch)
-    forever and ``_prior_tail``'s row_number window ranks the ENTIRE history
-    each micro-batch — per-trigger probe cost growing with stream age. After
-    consolidation the table is exactly (users × K) rows and the probe result
-    is unchanged (``_prior_tail`` already keeps only the K latest).
-
-    Same caveat as ``consolidate_counts`` / ``consolidate_last_seen``: run
-    only once the checkpoint has committed past all epochs — a replayed
-    epoch's null-safe exclusion cannot hide NULL-epoch rows, so an
-    UNCOMMITTED epoch replayed after consolidation would see its own events
-    in the prior tail and double-count boundary pairs.
+    Without it the table holds up to K rows per (user, epoch) and
+    ``_prior_tail``'s row_number ranks the whole history every micro-batch;
+    after it the table is (users × K) rows and the probe result is the same.
     """
-    latest = _prior_tail(tails, lags, epoch=None).withColumn(
-        "_epoch", F.lit(None).cast("long")
-    )
-    tails.overwrite_versioned(latest)
+    consolidate(tails, lambda ev: _latest(ev, lags))
 
 
 def consolidate_moments(moments: ParquetTable) -> None:
-    """Collapse per-epoch moment deltas into one NULL-epoch row per
-    (user, lag). Decimal addition is exact and associative, so the
-    consolidated sums — and therefore ``acf_from_moments`` — are
-    bit-identical to the unconsolidated epoch-sum. Sums are cast back to
-    the table's on-disk types (Spark widens re-aggregated decimals; a
-    drifting schema would poison later ``insert_new`` appends into the
-    same version dir). Replay caveat as :func:`consolidate_tails`: a
-    consolidated epoch's (user, lag, _epoch) key no longer exists, so an
-    UNCOMMITTED epoch replayed afterwards would re-insert its delta and
-    double-count.
-    """
-    cur = moments.read()
-    types = {f.name: f.dataType.simpleString() for f in cur.schema.fields}
-    sums = ["n", "s1", "s2", "s11", "s22", "s12"]
-    folded = (
-        cur.groupBy("user_id", "lag")
-        .agg(*[F.sum(c).alias(c) for c in sums])
-        .select(
-            "user_id",
-            "lag",
-            *[F.col(c).cast(types[c]).alias(c) for c in sums],
-            F.lit(None).cast("long").alias("_epoch"),
-        )
-    )
-    moments.overwrite_versioned(folded)
+    """Collapse the moment deltas to one base row per (user, lag). Decimal
+    addition is exact and associative, so ``acf_from_moments`` is
+    bit-identical before and after."""
+    consolidate(moments, _fold_moments)
 
 
 def acf_stream(

@@ -3,9 +3,9 @@
 
 A production crawl pipeline cannot rescan the corpus to decide which lines
 are boilerplate; it maintains the per-line document frequency as shards
-arrive and serves the scrub from the maintained index. State, on the
-epoch-delta ledger protocol (``lm_stream`` / ACF-moments — integer deltas
-keyed on (key…, _epoch), so a replayed micro-batch inserts nothing and the
+arrive and serves the scrub from the maintained index. State, two
+epoch-delta ledgers (``streaming/epochs.py`` — integer deltas keyed on
+(key…, _epoch), so a replayed micro-batch inserts nothing and the
 epoch-sum equals the batch aggregation exactly):
 
 - ``lines``:   (passage, df, _epoch) — per-batch DISTINCT-document line
@@ -26,8 +26,8 @@ incremental curation; the INDEX, not the early verdicts, is the
 maintained artifact.
 
 Zipf bound: the ledger holds one row per distinct line per epoch;
-``consolidate_line_df`` folds committed epochs to one row per line on the
-usual post-checkpoint cadence, and the SERVED set (df over threshold) is
+``consolidate_line_df`` folds committed epochs to one row per line, and
+the SERVED set (df over threshold) is
 corpus_lines/threshold at most — broadcast-sized.
 
 Reference behavior mirrored: the reference's dup-guard keeps a persistent
@@ -43,6 +43,7 @@ from pyspark.sql.streaming.query import StreamingQuery
 
 from schwab_elt_etl_pipeline_spark.operators.dedup import split_passages
 from schwab_elt_etl_pipeline_spark.sources.warehouse import ParquetTable
+from schwab_elt_etl_pipeline_spark.streaming.epochs import consolidate, write_delta
 from schwab_elt_etl_pipeline_spark.streaming.runner import start_foreach_batch
 
 __all__ = [
@@ -61,36 +62,32 @@ def update_line_df(
     batch: DataFrame,
     lines: ParquetTable,
     docstats: ParquetTable,
-    epoch: int | None = None,
+    epoch: int,
     passage_tokens: int = PASSAGE_TOKENS,
 ) -> None:
     """Merge one micro-batch's per-line distinct-doc deltas and its doc
-    count into the ledgers (epoch-keyed ``insert_new`` — replays insert
-    nothing)."""
+    count into the ledgers (epoch deltas — replays insert nothing)."""
     lp = split_passages(batch, "doc_id", "text", passage_tokens).localCheckpoint(
         eager=True
     )  # feeds both the line deltas and the doc count
-    delta = (
-        lp.groupBy("passage")
-        .agg(F.count_distinct("_id").cast("long").alias("df"))
-        .withColumn("_epoch", F.lit(epoch).cast("long"))
-    )
-    lines.insert_new(delta, keys=["passage", "_epoch"])
-    nd = (
-        lp.select("_id")
-        .distinct()
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .withColumn("_epoch", F.lit(epoch).cast("long"))
-    )
-    docstats.insert_new(nd, keys=["_epoch"])
+    delta = lp.groupBy("passage").agg(F.count_distinct("_id").cast("long").alias("df"))
+    write_delta(lines, delta, ["passage"], epoch)
+    nd = lp.select("_id").distinct().agg(F.count(F.lit(1)).cast("long").alias("n"))
+    write_delta(docstats, nd, [], epoch)
+
+
+def _fold_lines(lines: DataFrame) -> DataFrame:
+    return lines.groupBy("passage").agg(F.sum("df").cast("long").alias("df"))
+
+
+def _fold_docs(docstats: DataFrame) -> DataFrame:
+    return docstats.agg(F.sum("n").cast("long").alias("n"))
 
 
 def current_line_df(lines: ParquetTable) -> DataFrame:
     """The live (passage, df) table — epoch deltas summed out (exact:
     integer addition over once-per-doc batches)."""
-    return (
-        lines.read().groupBy("passage").agg(F.sum("df").cast("long").alias("df"))
-    )
+    return _fold_lines(lines.read())
 
 
 def current_boilerplate(
@@ -106,15 +103,10 @@ def current_boilerplate(
     dfc = current_line_df(lines)
     if min_docs_per is None:
         return dfc.filter(F.col("df") >= min_docs).select("passage")
-    thr = (
-        docstats.read()
-        .agg(F.sum("n").cast("long").alias("_n"))
-        .select(
-            F.greatest(
-                F.lit(min_docs).cast("long"),
-                F.expr(f"_n div {int(min_docs_per)}"),
-            ).alias("_thr")
-        )
+    thr = _fold_docs(docstats.read()).select(
+        F.greatest(
+            F.lit(min_docs).cast("long"), F.expr(f"n div {int(min_docs_per)}")
+        ).alias("_thr")
     )
     return (
         dfc.crossJoin(F.broadcast(thr))
@@ -155,21 +147,9 @@ def scrub_docs(
 
 
 def consolidate_line_df(lines: ParquetTable, docstats: ParquetTable) -> None:
-    """Collapse the ledgers to one NULL-epoch row per line (and one doc
-    total). Counts cast back to the on-disk types; usual caveat — only
-    past the checkpoint."""
-    cur = lines.read()
-    lines.overwrite_versioned(
-        cur.groupBy("passage")
-        .agg(F.sum("df").cast("long").alias("df"))
-        .withColumn("_epoch", F.lit(None).cast("long"))
-    )
-    ds = docstats.read()
-    docstats.overwrite_versioned(
-        ds.agg(F.sum("n").cast("long").alias("n")).withColumn(
-            "_epoch", F.lit(None).cast("long")
-        )
-    )
+    """Collapse the ledgers to one base row per line (and one doc total)."""
+    consolidate(lines, _fold_lines)
+    consolidate(docstats, _fold_docs)
 
 
 def boilerplate_stream(

@@ -36,8 +36,8 @@ endpoints to the post-merge roots, contracts every edge to a self-loop,
 and appends nothing — idempotence falls out of the fixpoint, no epoch
 arithmetic needed (the stamps are audit metadata).
 
-``compact_components`` folds the remap chains into members on the usual
-post-checkpoint cadence (reads are bit-identical before and after).
+``compact_components`` folds the remap chains into members (reads are
+bit-identical before and after).
 
 Reference behavior mirrored: the incremental twin of
 ``operators/dedup.py:355`` (see tests/test_streaming_components.py for the
@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 
 from schwab_elt_etl_pipeline_spark.operators.dedup import connected_components
 from schwab_elt_etl_pipeline_spark.sources.warehouse import ParquetTable
+from schwab_elt_etl_pipeline_spark.streaming.epochs import consolidate, stamp
 
 
 def _closure_table(remap: ParquetTable) -> ParquetTable:
@@ -171,11 +172,9 @@ def update_components_index(
     )
 
     merge_events = mapping.filter(F.col("node") != F.col("comp")).select(
-        F.col("node").alias("old_root"),
-        F.col("comp").alias("new_root"),
-        F.lit(epoch).cast("long").alias("_epoch"),
+        F.col("node").alias("old_root"), F.col("comp").alias("new_root")
     )
-    inserted = remap.insert_new(merge_events, keys=["old_root"])
+    inserted = remap.insert_new(stamp(merge_events, epoch), keys=["old_root"])
     if inserted:
         # Fold this batch's merges into the maintained closure: previously
         # retired roots whose final label just changed are remapped through
@@ -204,22 +203,21 @@ def update_components_index(
         ct.vacuum(keep_last=2)
         _CLOSURE_FRESH.add(remap.path)
 
-    new_members = (
-        res.join(mapping.withColumnRenamed("node", "res"), "res", "left")
-        .select(
-            "node",
-            F.coalesce("comp", "res").alias("root"),
-            F.lit(epoch).cast("long").alias("_epoch"),
-        )
-    )
-    members.insert_new(new_members, keys=["node"])
+    new_members = res.join(
+        mapping.withColumnRenamed("node", "res"), "res", "left"
+    ).select("node", F.coalesce("comp", "res").alias("root"))
+    members.insert_new(stamp(new_members, epoch), keys=["node"])
 
 
 def current_components(members: ParquetTable, remap: ParquetTable) -> DataFrame:
     """The live (node, comp) mapping — member roots resolved through the
     remap closure. Equals ``connected_components`` over every edge ever
     merged (min-node-id labels)."""
-    base = members.read().select("node", "root")
+    return _resolve_members(members.read(), remap)
+
+
+def _resolve_members(members: DataFrame, remap: ParquetTable) -> DataFrame:
+    base = members.select("node", "root")
     closure = _remap_closure(remap)
     if closure is None:
         return base.select("node", F.col("root").alias("comp"))
@@ -300,17 +298,13 @@ def leakage_safe_assignments(
 
 
 def compact_components(members: ParquetTable, remap: ParquetTable) -> None:
-    """Fold the remap chains into members: rewrite members with fully
-    resolved roots (NULL-epoch base) and truncate remap. Reads are
-    bit-identical before and after; run on the post-checkpoint cadence
-    (an UNCOMMITTED epoch replayed afterwards still appends nothing — the
-    fixpoint idempotence holds — but its audit stamps are gone)."""
-    resolved = current_components(members, remap).select(
-        "node",
-        F.col("comp").alias("root"),
-        F.lit(None).cast("long").alias("_epoch"),
+    """Fold the remap chains into members: rewrite members as base rows
+    with fully resolved roots and truncate remap. Reads are bit-identical
+    before and after (ARCHITECTURE.md, "Epoch-stamped state")."""
+    consolidate(
+        members,
+        lambda rows: _resolve_members(rows, remap).withColumnRenamed("comp", "root"),
     )
-    members.overwrite_versioned(resolved)
     if remap.exists():
         remap.overwrite_versioned(remap.read().limit(0))
     ct = _closure_table(remap)

@@ -57,8 +57,8 @@ up incrementally. This module runs the batch curation operators
   version and rewrite it as one clustered layout — the housekeeping that
   bounds per-trigger append-file counts over the stream's lifetime.
   Cadence: run it whenever the version/file count grows past the probe
-  budget (e.g. every N thousand epochs), and ONLY for epochs the streaming
-  checkpoint has committed past (see the function docstring).
+  budget (e.g. every N thousand epochs), past the streaming checkpoint
+  (ARCHITECTURE.md, "Epoch-stamped state").
 
 Every index append goes through ``ParquetTable.insert_new``, which creates a
 missing table on its first write (deduplicating on the keys) and otherwise
@@ -86,6 +86,11 @@ from schwab_elt_etl_pipeline_spark.operators.text import (
     token_count,
 )
 from schwab_elt_etl_pipeline_spark.sources.warehouse import ParquetTable
+from schwab_elt_etl_pipeline_spark.streaming.epochs import (
+    consolidate,
+    exclude_own,
+    stamp,
+)
 
 #: Schema of a crawl record stream (mirrors testdata documents.parquet plus
 #: an ingest timestamp the watermark rides on).
@@ -152,7 +157,7 @@ def write_curated_stream(
         ["fp"]
     )
 
-    def _sink(batch: DataFrame, _epoch: int) -> None:
+    def _sink(batch: DataFrame, _batch_id: int) -> None:
         # insert_new handles the not-exists branch itself AND dedups the
         # first batch on fp — a verbatim first write would trust upstream
         # dedup that a future caller might not have
@@ -172,27 +177,16 @@ def compact_index(index: ParquetTable, keep_versions: int = 2) -> int:
     pays a growing file-listing/footer tax. Compaction rewrites the table
     as ONE clustered layout (restoring the disjoint-file footer-stat
     invariant ``ParquetTable.append`` documents as degraded between
-    compactions) and, when the table carries an ``_epoch`` column, folds
-    all stamps to NULL — the "committed base" marker every probe treats as
-    seen/visible under any later epoch (the null-safe comparisons in the
-    ``update_*`` functions).
+    compactions) and folds any epoch stamps to the NULL base marker
+    (``streaming/epochs.py``): a replayed epoch that is still uncommitted
+    would no longer reproduce its output, so compact only past the
+    checkpoint.
 
     Returns the new version number. Old versions beyond ``keep_versions``
     are vacuumed (2, not 1: a lazy plan from the prior trigger may still
     pin the previous ``_v`` dir — the ann_pq_index lesson).
-
-    Replay caveat (same as ``consolidate_last_seen`` /
-    ``consolidate_counts``): compact ONLY epochs the streaming checkpoint
-    has committed past. The key-guarded ``insert_new`` stays exactly-once
-    regardless — a replayed batch re-inserts nothing — but an UNCOMMITTED
-    epoch replayed after its stamps were folded no longer recognizes its
-    own claims as fresh, so its per-batch OUTPUT (dedup/novelty/shortlist
-    rows) would not reproduce bit-for-bit.
     """
-    cur = index.read()
-    if "_epoch" in cur.columns:
-        cur = cur.withColumn("_epoch", F.lit(None).cast("long"))
-    version = index.overwrite_versioned(cur)
+    version = consolidate(index, lambda rows: rows)
     index.vacuum(keep_last=keep_versions)
     return version
 
@@ -513,25 +507,18 @@ def _probe_seen(
     """``df`` plus ``_seen``: whether its ``key`` is already claimed in ``index``.
 
     The epoch-aware probe of the fingerprint indexes (passage, window, gram),
-    whose rows carry the ``_epoch`` that claimed them. With ``epoch`` (the
+    whose rows carry the epoch that claimed them. With ``epoch`` (the
     foreachBatch batch_id) a key claimed BY THIS epoch counts as unseen, so a
     replayed batch reproduces its original output; rows claimed without an
     epoch (direct batch use, or folded by :func:`compact_index`) stay seen
-    under every epoch — NULL != epoch is SQL NULL, hence the coalesce.
-    Without ``epoch`` every index hit is seen. O(batch) lookups: a left join
-    of ``df`` against the index's key column, never a corpus rescan.
+    under every epoch. Without ``epoch`` every index hit is seen. O(batch)
+    lookups: a left join of ``df`` against the index's key column, never a
+    corpus rescan.
     """
     if not index.exists():
         return df.withColumn("_seen", F.lit(False))
-    idx = index.read().select(
-        key, F.lit(1).alias("_hit"), F.col("_epoch").alias("_idx_epoch")
-    )
-    seen = F.col("_hit").isNotNull()
-    if epoch is not None:
-        seen = seen & F.coalesce(F.col("_idx_epoch") != F.lit(epoch), F.lit(True))
-    return (
-        df.join(idx, key, "left").withColumn("_seen", seen).drop("_hit", "_idx_epoch")
-    )
+    idx = exclude_own(index.read(), epoch).select(key, F.lit(True).alias("_seen"))
+    return df.join(idx, key, "left").fillna(False, subset=["_seen"])
 
 
 def update_passage_index(
@@ -608,12 +595,8 @@ def update_passage_index(
             F.coalesce("deduped_text", F.lit("")).alias("deduped_text"),
         )
     )
-    new_fps = kept.select(
-        "fp",
-        F.col("_id").alias("first_doc_id"),
-        F.lit(epoch).cast("long").alias("_epoch"),
-    )
-    index.insert_new(new_fps, keys=["fp"])
+    new_fps = kept.select("fp", F.col("_id").alias("first_doc_id"))
+    index.insert_new(stamp(new_fps, epoch), keys=["fp"])
     return out
 
 
@@ -740,15 +723,10 @@ def update_window_index(
     occ = probed.withColumn("rk", F.row_number().over(rank))
     dup_starts = occ.filter(F.col("_seen") | (F.col("rk") > 1)).select("_id", "start")
     out = excise_and_rebuild(tokens, dup_starts, k, id_col)
-    new_fps = (
-        occ.filter(~F.col("_seen") & (F.col("rk") == 1))
-        .select(
-            "fp",
-            F.col("_id").alias("first_doc_id"),
-            F.lit(epoch).cast("long").alias("_epoch"),
-        )
+    new_fps = occ.filter(~F.col("_seen") & (F.col("rk") == 1)).select(
+        "fp", F.col("_id").alias("first_doc_id")
     )
-    index.insert_new(new_fps, keys=["fp"])
+    index.insert_new(stamp(new_fps, epoch), keys=["fp"])
     return out
 
 
@@ -809,10 +787,8 @@ def update_pq_index(
             batch, m, k_codes, id_col, vec_col, seed, dim=dim
         )
         books_table.overwrite_versioned(books)
-        codes = pq_encode(batch, books, m, dim, id_col, vec_col).withColumn(
-            "_epoch", F.lit(epoch).cast("long")
-        )
-        codes_table.overwrite_versioned(codes)
+        codes = pq_encode(batch, books, m, dim, id_col, vec_col)
+        codes_table.overwrite_versioned(stamp(codes, epoch))
         return (
             batch.select(
                 F.col(id_col).alias("q_id"),
@@ -872,9 +848,7 @@ def update_ivfadc_index(
         )
         # retrofit the epoch column onto the seed build so later epochs can
         # exclude their own replayed claims (build writes epoch-less codes)
-        codes_table.overwrite_versioned(
-            codes_table.read().withColumn("_epoch", F.lit(epoch).cast("long"))
-        )
+        codes_table.overwrite_versioned(stamp(codes_table.read(), epoch))
         return (
             batch.select(
                 F.col(id_col).alias("q_id"),
@@ -946,15 +920,10 @@ def update_gram_index(
             ),
         )
     )
-    new_fps = (
-        occ.filter((~F.col("_seen")) & (F.col("rk") == 1))
-        .select(
-            "gh",
-            F.col("doc_id").alias("first_doc_id"),
-            F.lit(epoch).cast("long").alias("_epoch"),
-        )
+    new_fps = occ.filter((~F.col("_seen")) & (F.col("rk") == 1)).select(
+        "gh", F.col("doc_id").alias("first_doc_id")
     )
-    index.insert_new(new_fps, keys=["gh"])
+    index.insert_new(stamp(new_fps, epoch), keys=["gh"])
     return out
 
 

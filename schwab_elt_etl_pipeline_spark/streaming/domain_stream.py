@@ -2,11 +2,12 @@
 
 The streaming twin of ``operators/domains.py``: as crawl batches arrive,
 per-(domain, canonical page) doc counts and quality sums merge into an
-epoch-keyed ledger, and :func:`current_domain_stats` serves the SAME
-(domain, n_docs, n_pages, dup_rate, mean_quality) table the batch
-``domain_stats`` would compute over everything ingested so far — so a
-domain gate (``domain_quality_gate``) can re-verdict continuously instead
-of waiting for a full-corpus recompute.
+epoch-delta ledger (``streaming/epochs.py``), and
+:func:`current_domain_stats` serves the SAME (domain, n_docs, n_pages,
+dup_rate, mean_quality) table the batch ``domain_stats`` would compute
+over everything ingested so far — so a domain gate
+(``domain_quality_gate``) can re-verdict continuously instead of waiting
+for a full-corpus recompute.
 
 Ledger grain is the PAGE, not the domain: ``n_pages`` is a distinct count
 (not additive), so the ledger keys on (domain, canonical_url, _epoch) and
@@ -39,6 +40,7 @@ from schwab_elt_etl_pipeline_spark.operators.domains import (
 )
 from schwab_elt_etl_pipeline_spark.operators.urls import canonical_url
 from schwab_elt_etl_pipeline_spark.sources.warehouse import ParquetTable
+from schwab_elt_etl_pipeline_spark.streaming.epochs import consolidate, write_delta
 from schwab_elt_etl_pipeline_spark.streaming.runner import (
     start_foreach_batch,
 )
@@ -50,12 +52,6 @@ __all__ = [
     "domain_stream",
 ]
 
-#: Ledger epoch reserved for the consolidated base row. Streaming epochs
-#: are always >= 0, so delta inserts can never key-collide with the base
-#: (``insert_new`` uses null-safe key equality — a NULL/NULL collision
-#: would silently drop deltas for already-seen pages).
-CONSOLIDATED_EPOCH = -1
-
 
 def update_domain_stats(
     batch: DataFrame,
@@ -66,25 +62,15 @@ def update_domain_stats(
     domain_expr: Callable[[Column], Column] = registrable_domain,
 ) -> None:
     """Merge one micro-batch's per-(domain, page) deltas into the ledger
-    (epoch-keyed ``insert_new`` — replays insert nothing). Rows whose URL
+    (an epoch delta — replays insert nothing). Rows whose URL
     quarantines to NULL are dropped, mirroring the batch path's
     canonicalize-then-gate order.
-
-    ``epoch`` is required and must be >= 0: negative epochs are reserved
-    for the consolidated base (:data:`CONSOLIDATED_EPOCH`), and an
-    unkeyed delta would collide with it under the sink's null-safe key
-    equality, silently discarding counts for already-seen pages.
 
     ``domain_expr`` is the registrable-domain KERNEL (host Column ->
     domain Column) — the heuristic core by default, or
     ``operators/psl.py registrable_domain_psl`` for real public-suffix
     semantics; pass the SAME kernel the batch ``domain_stats`` caller
     uses or the stream ≡ batch identity breaks on multi-label suffixes."""
-    if epoch < 0:
-        raise ValueError(
-            f"epoch must be >= 0 (got {epoch}); negative epochs are "
-            "reserved for the consolidated base row"
-        )
     delta = (
         batch.select(
             canonical_url(url_col).alias("canonical_url"),
@@ -102,9 +88,15 @@ def update_domain_stats(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("_w").cast("long").alias("q_sum"),
         )
-        .withColumn("_epoch", F.lit(epoch).cast("long"))
     )
-    ledger.insert_new(delta, keys=["domain", "canonical_url", "_epoch"])
+    write_delta(ledger, delta, ["domain", "canonical_url"], epoch)
+
+
+def _fold_pages(ledger: DataFrame) -> DataFrame:
+    return ledger.groupBy("domain", "canonical_url").agg(
+        F.sum("n_docs").cast("long").alias("n_docs"),
+        F.sum("q_sum").cast("long").alias("q_sum"),
+    )
 
 
 def current_domain_stats(
@@ -114,16 +106,9 @@ def current_domain_stats(
     integer algebra), then the batch operator's exact division
     expressions. Bit-identical to ``domain_stats`` over the canonicalized
     union of all ingested batches."""
-    pages = (
-        ledger.read()
-        .groupBy("domain", "canonical_url")
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("q_sum").cast("long").alias("q_sum"),
-        )
-    )
     return (
-        pages.groupBy("domain")
+        _fold_pages(ledger.read())
+        .groupBy("domain")
         .agg(
             F.sum("n_docs").cast("long").alias("n_docs"),
             F.count(F.lit(1)).alias("n_pages"),
@@ -148,21 +133,9 @@ def current_domain_stats(
 def consolidate_domain_stats(
     ledger: ParquetTable, keep_versions: int = 2
 ) -> int:
-    """Collapse the ledger to ONE base row per (domain, page) at the
-    reserved :data:`CONSOLIDATED_EPOCH` (read-identical — the fold is the
-    same associative algebra the serve path applies). Usual caveat:
-    consolidate only past the streaming checkpoint, or a replayed
-    uncommitted epoch re-inserts its delta."""
-    cur = (
-        ledger.read()
-        .groupBy("domain", "canonical_url")
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("q_sum").cast("long").alias("q_sum"),
-        )
-        .withColumn("_epoch", F.lit(CONSOLIDATED_EPOCH).cast("long"))
-    )
-    version = ledger.overwrite_versioned(cur)
+    """Collapse the ledger to ONE base row per (domain, page)
+    (read-identical — the fold is the one the serve path applies)."""
+    version = consolidate(ledger, _fold_pages)
     ledger.vacuum(keep_last=keep_versions)
     return version
 

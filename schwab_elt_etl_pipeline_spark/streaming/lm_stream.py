@@ -3,10 +3,9 @@
 
 A production LM quality filter retrains its n-gram counts as crawl shards
 arrive rather than rescanning the corpus. The state is the two trained
-count tables, maintained as epoch-delta ledgers (the ``seasonal_stream`` /
-ACF-moments protocol — integer count deltas keyed on (ngram…, _epoch), so
-a replayed micro-batch inserts nothing and the epoch-sum equals the batch
-aggregation exactly):
+count tables, maintained as epoch-delta ledgers (``streaming/epochs.py`` —
+integer count deltas keyed on (ngram…, _epoch), so a replayed micro-batch
+inserts nothing and the epoch-sum equals the batch aggregation exactly):
 
 - ``bigram``: (prev, cur, bc, _epoch) — held-in slice bigram counts;
 - ``unigram``: (token, uc, _epoch) — held-in slice unigram counts.
@@ -16,8 +15,7 @@ any prefix of the stream, ``lm_score_docs`` against ``current_lm_model``
 is bit-identical to the batch query retrained on the same documents —
 pinned by tests/test_streaming_lm.py. The vocabulary tables are
 Zipf-bounded, so the maintained model stays broadcast-sized at any corpus
-scale; ``consolidate_lm_counts`` folds committed epochs on the usual
-post-checkpoint cadence.
+scale; ``consolidate_lm_counts`` folds committed epochs.
 
 Reference behavior mirrored: the periodically retrained scoring models of
 sql/opt.sql's staged quality procedures, re-expressed as exactly-once
@@ -36,6 +34,7 @@ from schwab_elt_etl_pipeline_spark.operators.langmodel import (
     held_in,
 )
 from schwab_elt_etl_pipeline_spark.sources.warehouse import ParquetTable
+from schwab_elt_etl_pipeline_spark.streaming.epochs import consolidate, write_delta
 from schwab_elt_etl_pipeline_spark.streaming.runner import start_foreach_batch
 
 __all__ = [
@@ -51,25 +50,23 @@ def update_lm_counts(
     batch: DataFrame,
     bigram: ParquetTable,
     unigram: ParquetTable,
-    epoch: int | None = None,
+    epoch: int,
 ) -> None:
     """Merge one micro-batch's held-in n-gram count deltas into the model
-    ledgers (epoch-keyed ``insert_new`` — replays insert nothing)."""
+    ledgers (epoch deltas — replays insert nothing)."""
     held = batch.filter(held_in()).localCheckpoint(eager=True)  # feeds both
-    bg = (
-        doc_bigrams(held)
-        .groupBy("prev", "cur")
-        .agg(F.count(F.lit(1)).alias("bc"))
-        .withColumn("_epoch", F.lit(epoch).cast("long"))
-    )
-    bigram.insert_new(bg, keys=["prev", "cur", "_epoch"])
-    ug = (
-        doc_unigrams(held)
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("uc"))
-        .withColumn("_epoch", F.lit(epoch).cast("long"))
-    )
-    unigram.insert_new(ug, keys=["token", "_epoch"])
+    bg = doc_bigrams(held).groupBy("prev", "cur").agg(F.count(F.lit(1)).alias("bc"))
+    write_delta(bigram, bg, ["prev", "cur"], epoch)
+    ug = doc_unigrams(held).groupBy("token").agg(F.count(F.lit(1)).alias("uc"))
+    write_delta(unigram, ug, ["token"], epoch)
+
+
+def _fold_bigrams(bigram: DataFrame) -> DataFrame:
+    return bigram.groupBy("prev", "cur").agg(F.sum("bc").cast("long").alias("bc"))
+
+
+def _fold_unigrams(unigram: DataFrame) -> DataFrame:
+    return unigram.groupBy("token").agg(F.sum("uc").cast("long").alias("uc"))
 
 
 def current_lm_model(
@@ -78,27 +75,13 @@ def current_lm_model(
     """The live (prev, cur, bc) and (token, uc) trained tables — epoch
     deltas summed out (integer addition is exact, so this equals the batch
     aggregation over every held-in document delivered so far)."""
-    bg = (
-        bigram.read()
-        .groupBy("prev", "cur")
-        .agg(F.sum("bc").cast("long").alias("bc"))
-    )
-    ug = unigram.read().groupBy("token").agg(F.sum("uc").cast("long").alias("uc"))
-    return bg, ug
+    return _fold_bigrams(bigram.read()), _fold_unigrams(unigram.read())
 
 
 def consolidate_lm_counts(bigram: ParquetTable, unigram: ParquetTable) -> None:
-    """Collapse the ledgers to one NULL-epoch row per n-gram. Counts are
-    cast back to the on-disk types (schema-drift guard, as in
-    ``consolidate_cells``); usual caveat — only past the checkpoint."""
-    for table, keys, val in ((bigram, ["prev", "cur"], "bc"), (unigram, ["token"], "uc")):
-        cur = table.read()
-        vtype = {f.name: f.dataType.simpleString() for f in cur.schema.fields}[val]
-        table.overwrite_versioned(
-            cur.groupBy(*keys)
-            .agg(F.sum(val).cast(vtype).alias(val))
-            .withColumn("_epoch", F.lit(None).cast("long"))
-        )
+    """Collapse the ledgers to one base row per n-gram."""
+    consolidate(bigram, _fold_bigrams)
+    consolidate(unigram, _fold_unigrams)
 
 
 def lm_stream(

@@ -8,9 +8,8 @@ micro-batch boundaries** — the last event a user produced in batch *k*
 pairs with their first event in batch *k+1*. Dropping boundary pairs
 undercounts exactly the long-gap transitions (often the interesting ones).
 
-State is two tables, both epoch-stamped for replay idempotence (the same
-``insert_new`` protocol as ``seasonal_stream.py`` and the dedup/ANN index
-maintenance in ``corpus.py``):
+State is two epoch-delta ledgers (``streaming/epochs.py``), so a replayed
+micro-batch inserts nothing:
 
 - ``cells``: per-epoch DELTA counts ``(prev, next, cnt, _epoch)`` keyed on
   (prev, next, _epoch) — a replayed epoch recomputes the identical delta
@@ -21,8 +20,7 @@ maintenance in ``corpus.py``):
   probe reads the latest PRIOR epoch's row per user — rows of the current
   epoch are excluded null-safely, so a replayed batch sees exactly the
   state its original delivery saw. Rows accumulate one per (user, epoch);
-  ``consolidate_last_seen`` collapses committed epochs (same caveat as
-  every epoch compaction: only after the checkpoint passed them).
+  ``consolidate_last_seen`` collapses committed epochs.
 
 Per micro-batch: one window pass for within-batch pairs, ONE groupBy for
 the per-user first/last edge events, one user-keyed join against the prior
@@ -46,6 +44,11 @@ from pyspark.sql.streaming.query import StreamingQuery
 from pyspark.sql.window import Window
 
 from schwab_elt_etl_pipeline_spark.sources.warehouse import ParquetTable
+from schwab_elt_etl_pipeline_spark.streaming.epochs import (
+    consolidate,
+    exclude_own,
+    write_delta,
+)
 from schwab_elt_etl_pipeline_spark.streaming.runner import start_foreach_batch
 
 
@@ -72,60 +75,58 @@ def _edge_events(ev: DataFrame) -> DataFrame:
     )
 
 
+def _last_events(ev: DataFrame) -> DataFrame:
+    """Each user's latest (ts, event_id, event_type) row."""
+    return (
+        ev.groupBy("user_id")
+        .agg(
+            F.max_by(
+                F.struct("ts", "event_id", "event_type"),
+                F.struct("ts", "event_id"),
+            ).alias("_l")
+        )
+        .select("user_id", "_l.ts", "_l.event_id", "_l.event_type")
+    )
+
+
 def update_transition_cells(
     batch: DataFrame,
     cells: ParquetTable,
     last_seen: ParquetTable,
-    epoch: int | None = None,
+    epoch: int,
 ) -> None:
     """Merge one micro-batch into the transition state: within-batch pairs
     plus the boundary pair from each user's prior last-seen event, as an
-    epoch-keyed delta; then record this batch's per-user last events."""
+    epoch delta; then record this batch's per-user last events."""
     edges = _edge_events(batch).localCheckpoint(eager=True)
     pairs = within_batch_pairs(batch)
     if last_seen.exists():
-        prior = last_seen.read()
-        if epoch is not None:
-            # null-safe: NULL-epoch rows (direct batch use) stay visible
-            prior = prior.filter(
-                F.coalesce(F.col("_epoch") != F.lit(epoch), F.lit(True))
-            )
-        prior_last = prior.groupBy("user_id").agg(
-            F.max_by("event_type", F.struct("ts", "event_id")).alias("prev")
+        prior_last = _last_events(exclude_own(last_seen.read(), epoch)).select(
+            "user_id", F.col("event_type").alias("prev")
         )
         boundary = (
-            edges.select(
-                "user_id", F.col("_first.event_type").alias("next")
-            )
+            edges.select("user_id", F.col("_first.event_type").alias("next"))
             .join(prior_last, "user_id")
             .select("prev", "next")
         )
         pairs = pairs.unionByName(boundary)
-    delta = (
-        pairs.groupBy("prev", "next")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .withColumn("_epoch", F.lit(epoch).cast("long"))
+    delta = pairs.groupBy("prev", "next").agg(F.count(F.lit(1)).alias("cnt"))
+    write_delta(cells, delta, ["prev", "next"], epoch)
+    write_delta(
+        last_seen,
+        edges.select("user_id", "_last.ts", "_last.event_id", "_last.event_type"),
+        ["user_id"],
+        epoch,
     )
-    cells.insert_new(delta, keys=["prev", "next", "_epoch"])
-    last_seen.insert_new(
-        edges.select(
-            "user_id",
-            F.col("_last.ts").alias("ts"),
-            F.col("_last.event_id").alias("event_id"),
-            F.col("_last.event_type").alias("event_type"),
-            F.lit(epoch).cast("long").alias("_epoch"),
-        ),
-        keys=["user_id", "_epoch"],
-    )
+
+
+def _fold_cells(cells: DataFrame) -> DataFrame:
+    return cells.groupBy("prev", "next").agg(F.sum("cnt").alias("cnt"))
 
 
 def current_cells(cells: ParquetTable) -> DataFrame:
     """The live (prev, next, cnt) matrix — epoch deltas summed out."""
-    return (
-        cells.read()
-        .groupBy("prev", "next")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
+    return _fold_cells(cells.read())
 
 
 def transition_probs(cells_df: DataFrame) -> DataFrame:
@@ -145,47 +146,15 @@ def transition_probs(cells_df: DataFrame) -> DataFrame:
 
 
 def consolidate_last_seen(last_seen: ParquetTable) -> None:
-    """Collapse to one NULL-epoch row per user (the current last event) —
-    housekeeping once the checkpoint has committed past all epochs."""
-    latest = (
-        last_seen.read()
-        .groupBy("user_id")
-        .agg(
-            F.max_by(
-                F.struct("ts", "event_id", "event_type"),
-                F.struct("ts", "event_id"),
-            ).alias("_l")
-        )
-        .select(
-            "user_id",
-            F.col("_l.ts").alias("ts"),
-            F.col("_l.event_id").alias("event_id"),
-            F.col("_l.event_type").alias("event_type"),
-            F.lit(None).cast("long").alias("_epoch"),
-        )
-    )
-    last_seen.overwrite_versioned(latest)
+    """Collapse to one base row per user: the current last event."""
+    consolidate(last_seen, _last_events)
 
 
 def consolidate_cells(cells: ParquetTable) -> None:
-    """Collapse per-epoch count deltas into one NULL-epoch row per
-    (prev, next) — integer addition is exact, so ``current_cells`` and
-    ``transition_probs`` are bit-identical before and after. Counts are
-    cast back to the on-disk type (re-aggregation would otherwise widen
-    the sum column and drift the schema under later epoch appends). Same
-    replay caveat as ``consolidate_last_seen``: a consolidated epoch's
-    (prev, next, _epoch) key no longer exists, so an UNCOMMITTED epoch
-    replayed afterwards would re-insert its delta and double-count."""
-    cur = cells.read()
-    cnt_type = dict((f.name, f.dataType.simpleString()) for f in cur.schema.fields)[
-        "cnt"
-    ]
-    folded = (
-        cur.groupBy("prev", "next")
-        .agg(F.sum("cnt").cast(cnt_type).alias("cnt"))
-        .withColumn("_epoch", F.lit(None).cast("long"))
-    )
-    cells.overwrite_versioned(folded)
+    """Collapse the count deltas to one base row per (prev, next). Integer
+    addition is exact, so ``current_cells`` and ``transition_probs`` are
+    bit-identical before and after."""
+    consolidate(cells, _fold_cells)
 
 
 def transition_stream(

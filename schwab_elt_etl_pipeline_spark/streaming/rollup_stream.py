@@ -9,12 +9,12 @@ is itself just a re-aggregation, and exact DECIMAL sums make the maintained
 table bit-identical to a from-scratch rollup at any batch boundary
 (tested in test_streaming_rollup).
 
-Exactly-once-effective under replay: partials are staged per epoch with
-``insert_new`` on (keys…, bucket_ts, _epoch) — a replayed micro-batch
+Exactly-once-effective under replay: partials are staged as epoch deltas
+(``streaming/epochs.py``) on (keys…, bucket_ts) — a replayed micro-batch
 (same epoch id, Structured Streaming's failure contract) inserts zero rows —
 and the served rollup is the re-aggregation of the staged partials. The
-stage grows by one row per (keys, bucket, epoch) and is compacted by
-re-staging the folded table under the epoch floor (``compact_stage``).
+stage grows by one row per (keys, bucket, epoch) and ``compact_stage``
+folds it to one base row per (keys, bucket).
 """
 
 from __future__ import annotations
@@ -27,6 +27,7 @@ from schwab_elt_etl_pipeline_spark.streaming.runner import start_foreach_batch
 
 from schwab_elt_etl_pipeline_spark.operators.rollup import rollup_minutes
 from schwab_elt_etl_pipeline_spark.sources.warehouse import ParquetTable
+from schwab_elt_etl_pipeline_spark.streaming.epochs import consolidate, write_delta
 
 
 def fold_partials(staged: DataFrame, keys: list[str]) -> DataFrame:
@@ -64,8 +65,7 @@ def run_streaming_rollup(
         if batch.isEmpty():
             return
         partials = rollup_minutes(batch, keys, ts=ts, value=value, minutes=minutes)
-        staged = partials.withColumn("_epoch", F.lit(batch_id).cast("long"))
-        stage_table.insert_new(staged, keys=[*keys, "bucket_ts", "_epoch"])
+        write_delta(stage_table, partials, [*keys, "bucket_ts"], batch_id)
 
     return start_foreach_batch(
         events_stream, process_batch, checkpoint_dir, trigger_seconds
@@ -73,46 +73,14 @@ def run_streaming_rollup(
 
 
 def compact_stage(stage_table: ParquetTable, keys: list[str]) -> int:
-    """Fold the stage to one row per (keys, bucket) and rewrite it under the
-    current epoch floor, so stage size stays O(buckets), not O(buckets ×
-    epochs). The fold is associative so folding a fold is a no-op. Commits
-    with ``base_version``: if a live streaming batch lands between the
-    compactor's read and its flip, the compaction ABORTS
-    (ConcurrentWriteConflict) instead of silently dropping that batch's
-    partials — retry compaction at the next quiet moment.
-
-    No-ops (returns the current version, or 0 when the table was never
-    written) on a missing or empty stage: without the guard, ``read()`` of a
-    never-written table raises, and an empty stage would stamp ``_epoch``
-    NULL — breaking ``insert_new``'s key matching so replayed batches could
-    re-insert.
+    """Fold the stage to one base row per (keys, bucket), so its size stays
+    O(buckets), not O(buckets × epochs). The fold is associative, so
+    folding a fold is a no-op. Returns the committed version (the current
+    one, or 0, when the stage is empty or missing); raises
+    ``ConcurrentWriteConflict`` when a live batch lands during it — retry at
+    the next quiet moment.
     """
-    if not stage_table.exists():
-        return 0
-    base = stage_table.current_version()
-    staged = stage_table.read()
-    max_epoch = staged.agg(F.max("_epoch")).first()[0]
-    if max_epoch is None:  # empty stage — nothing to fold
-        return base or 0
-    # cast the folded measures BACK to the staged column types: re-summing
-    # widens sums (decimal(28,6) → decimal(38,6)), and a post-compaction
-    # append from rollup_minutes would then mix parquet physical types in
-    # one version dir, breaking every later read of the stage. The fold is
-    # a row-count reduction — values always fit the original widths.
-    folded = fold_partials(staged, keys).withColumn(
-        "_epoch", F.lit(max_epoch).cast("long")
-    )
-    folded = folded.select(
-        *[
-            F.col(f.name).cast(f.dataType).alias(f.name)
-            for f in staged.schema.fields
-        ]
-    )
-    # base_version: a streaming batch committing between our read and this
-    # flip must abort the compaction (its partials would silently vanish
-    # from the current version while its checkpoint says it is done) —
-    # compaction is safe to just retry later
-    return stage_table.overwrite_versioned(folded, base_version=base)
+    return consolidate(stage_table, lambda staged: fold_partials(staged, keys))
 
 
 def update_distinct_sketch_table(
@@ -173,7 +141,8 @@ def update_quantile_sketch_table(
     ts: str = "ts",
     value: str = "value",
     k: int = 200,
-    epoch: int | None = None,
+    *,
+    epoch: int,
 ) -> None:
     """Incrementally maintain a per-(keys…, day) KLL quantile-sketch table —
     the quantile companion of :func:`update_distinct_sketch_table`, so a
@@ -200,9 +169,15 @@ def update_quantile_sketch_table(
             F.expr(f"kll_sketch_agg_double({value}, {k})").alias("qsk"),
             F.count(value).alias("n"),
         )
-        .withColumn("_epoch", F.lit(epoch).cast("long"))
     )
-    table.insert_new(new, keys=[*keys, "day", "_epoch"])
+    write_delta(table, new, [*keys, "day"], epoch)
+
+
+def _merge_sketches(sketches: DataFrame, by: list[str]) -> DataFrame:
+    return sketches.groupBy(*by).agg(
+        F.expr("kll_merge_agg_double(qsk)").alias("qsk"),
+        F.sum("n").cast("long").alias("n"),
+    )
 
 
 def read_quantile_estimates(
@@ -220,11 +195,7 @@ def read_quantile_estimates(
     guarantee across otherwise-identical reads (HLL's register-max union
     is commutative; KLL compaction is not). Consumers pin exact ``n`` and
     the rank window, never sketch-value bytes."""
-    merged = table.read().groupBy(*keys).agg(
-        F.expr("kll_merge_agg_double(qsk)").alias("qsk"),
-        F.sum("n").alias("n"),
-    )
-    return merged.select(
+    return _merge_sketches(table.read(), keys).select(
         *keys,
         "n",
         *[
@@ -237,26 +208,12 @@ def read_quantile_estimates(
 
 
 def consolidate_quantile_sketches(table: ParquetTable, keys: list[str]) -> None:
-    """Collapse the epoch ledger to one NULL-epoch row per (keys…, day).
-    Merging is lossless in the KLL guarantee (rank error never grows under
-    union), and the exact ``n`` fold is bit-identical; the merged sketch
-    BYTES may differ from the unconsolidated merge order, so the pin is the
-    rank-error window plus exact n, not byte identity. Usual caveat: only
-    after the checkpoint committed past the folded epochs — a consolidated
-    epoch's delta key no longer exists, so an UNCOMMITTED replay would
-    re-insert and double-weight."""
-    cur = table.read()
-    order = [f.name for f in cur.schema.fields]
-    folded = (
-        cur.groupBy(*keys, "day")
-        .agg(
-            F.expr("kll_merge_agg_double(qsk)").alias("qsk"),
-            F.sum("n").cast("long").alias("n"),
-        )
-        .withColumn("_epoch", F.lit(None).cast("long"))
-        .select(*order)
-    )
-    table.overwrite_versioned(folded)
+    """Collapse the ledger to one base row per (keys…, day). Merging is
+    lossless in the KLL guarantee (rank error never grows under union), and
+    the exact ``n`` fold is bit-identical; the merged sketch BYTES may
+    differ from the unconsolidated merge order, so the pin is the
+    rank-error window plus exact n, not byte identity."""
+    consolidate(table, lambda sketches: _merge_sketches(sketches, [*keys, "day"]))
 
 
 def read_volume_drift(

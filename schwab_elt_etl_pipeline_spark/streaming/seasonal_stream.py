@@ -18,10 +18,9 @@ unbounded-domain inputs). At 100 TB the table is |types| x 24 x
 
 Per micro-batch (``seasonal_stream``):
 
-1. the batch's (cell, val) counts append via ``insert_new`` keyed on
-   (cell, val, _epoch) — a replayed epoch inserts nothing, so counts are
-   exactly-once under foreachBatch's at-least-once contract (the same
-   epoch protocol as the dedup/ANN index maintenance in ``corpus.py``);
+1. the batch's (cell, val) counts append as an epoch delta
+   (``streaming/epochs.py``) — a replayed epoch inserts nothing, so counts
+   are exactly-once under foreachBatch's at-least-once contract;
 2. the per-cell baseline + MAD recompute from the merged counts — a
    weighted-median window pass over the bounded table, not the stream;
 3. the batch's arrivals are flagged against that current baseline and
@@ -47,6 +46,7 @@ from pyspark.sql.streaming.query import StreamingQuery
 from pyspark.sql.window import Window
 
 from schwab_elt_etl_pipeline_spark.sources.warehouse import ParquetTable
+from schwab_elt_etl_pipeline_spark.streaming.epochs import consolidate, write_delta
 from schwab_elt_etl_pipeline_spark.streaming.runner import start_foreach_batch
 
 _CELL = ["event_type", "hod"]
@@ -66,37 +66,25 @@ def seasonal_counts(ev: DataFrame) -> DataFrame:
 
 
 def update_seasonal_counts(
-    batch: DataFrame, counts: ParquetTable, epoch: int | None = None
+    batch: DataFrame, counts: ParquetTable, epoch: int
 ) -> None:
-    """Merge one micro-batch's cell/value counts into the persistent table.
+    """Merge one micro-batch's cell/value counts into the persistent ledger
+    (an epoch delta: a re-delivered batch inserts nothing)."""
+    write_delta(counts, seasonal_counts(batch), ["event_type", "hod", "val"], epoch)
 
-    Epoch-keyed ``insert_new`` makes the merge replay-idempotent: a
-    re-delivered batch re-inserts rows whose (cell, val, _epoch) keys all
-    exist already, so nothing double-counts. ``consolidate_counts`` can
-    later collapse committed epochs into one row per (cell, val)."""
-    bc = seasonal_counts(batch).withColumn(
-        "_epoch", F.lit(epoch).cast("long")
-    )
-    counts.insert_new(bc, keys=["event_type", "hod", "val", "_epoch"])
+
+def _fold_counts(counts: DataFrame) -> DataFrame:
+    return counts.groupBy("event_type", "hod", "val").agg(F.sum("cnt").alias("cnt"))
 
 
 def current_counts(counts: ParquetTable) -> DataFrame:
     """The live (event_type, hod, val, cnt) statistic — epochs summed out."""
-    return (
-        counts.read()
-        .groupBy("event_type", "hod", "val")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
+    return _fold_counts(counts.read())
 
 
 def consolidate_counts(counts: ParquetTable) -> None:
-    """Collapse all epochs into single NULL-epoch rows (housekeeping once
-    the streaming checkpoint has committed past them — a replay of a
-    consolidated epoch would double-count, same caveat as compacting any
-    epoch-stamped index)."""
-    counts.overwrite_versioned(
-        current_counts(counts).withColumn("_epoch", F.lit(None).cast("long"))
-    )
+    """Collapse the ledger to one base row per (cell, val)."""
+    consolidate(counts, _fold_counts)
 
 
 def _weighted_median(counts: DataFrame, val: str, out: str) -> DataFrame:

@@ -1,9 +1,9 @@
 """Incrementally maintained training-shard manifest.
 
 The streaming twin of ``operators/sharding.py shard_manifest``: as crawl
-batches arrive, per-shard doc/token totals are merged into an epoch-keyed
-ledger (``insert_new`` on (shard, _epoch) — replayed micro-batches insert
-nothing), and :func:`current_shard_manifest` serves the SAME manifest the
+batches arrive, per-shard doc/token totals are merged into an epoch-delta
+ledger (``streaming/epochs.py`` — replayed micro-batches insert nothing),
+and :func:`current_shard_manifest` serves the SAME manifest the
 batch operator would compute over everything ingested so far — doc counts,
 token mass, id range, exact integer ppm shares. A trainer's data loader
 reads a manifest that is continuously true of the growing corpus instead
@@ -17,9 +17,9 @@ approximate.
 
 Ledger algebra: counts/sums merge by addition, min/max by min/max — all
 associative+commutative, so per-epoch deltas fold in any order and
-:func:`consolidate_shard_stats` can collapse the ledger to one NULL-epoch
-base row per shard (read-identical) to bound file counts over the
-stream's lifetime (the ``compact_index`` discipline).
+:func:`consolidate_shard_stats` can collapse the ledger to one base row
+per shard (read-identical) to bound file counts over the stream's
+lifetime.
 """
 
 from __future__ import annotations
@@ -34,6 +34,7 @@ from schwab_elt_etl_pipeline_spark.operators.sharding import (
     token_count,
 )
 from schwab_elt_etl_pipeline_spark.sources.warehouse import ParquetTable
+from schwab_elt_etl_pipeline_spark.streaming.epochs import consolidate, write_delta
 from schwab_elt_etl_pipeline_spark.streaming.runner import (
     start_foreach_batch,
 )
@@ -49,13 +50,13 @@ __all__ = [
 def update_shard_stats(
     batch: DataFrame,
     stats: ParquetTable,
-    epoch: int | None = None,
+    epoch: int,
     shards: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> None:
-    """Merge one micro-batch's per-shard deltas into the ledger
-    (epoch-keyed ``insert_new`` — replays insert nothing)."""
+    """Merge one micro-batch's per-shard deltas into the ledger (an epoch
+    delta — replays insert nothing)."""
     delta = (
         batch.select(
             shard_of(id_col, shards).alias("shard"),
@@ -69,45 +70,30 @@ def update_shard_stats(
             F.min("_id").alias("min_doc"),
             F.max("_id").alias("max_doc"),
         )
-        .withColumn("_epoch", F.lit(epoch).cast("long"))
     )
-    stats.insert_new(delta, keys=["shard", "_epoch"])
+    write_delta(stats, delta, ["shard"], epoch)
+
+
+def _fold_stats(stats: DataFrame) -> DataFrame:
+    return stats.groupBy("shard").agg(
+        F.sum("n_docs").cast("long").alias("n_docs"),
+        F.sum("sum_tokens").cast("long").alias("sum_tokens"),
+        F.min("min_doc").alias("min_doc"),
+        F.max("max_doc").alias("max_doc"),
+    )
 
 
 def current_shard_manifest(stats: ParquetTable) -> DataFrame:
     """The live manifest — epoch deltas folded (exact integer algebra),
     shares attached with the batch operator's arithmetic. Bit-identical
     to ``shard_manifest`` over the union of all ingested batches."""
-    per = (
-        stats.read()
-        .groupBy("shard")
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("sum_tokens").cast("long").alias("sum_tokens"),
-            F.min("min_doc").alias("min_doc"),
-            F.max("max_doc").alias("max_doc"),
-        )
-    )
-    return manifest_shares(per)
+    return manifest_shares(_fold_stats(stats.read()))
 
 
 def consolidate_shard_stats(stats: ParquetTable, keep_versions: int = 2) -> int:
-    """Collapse the ledger to ONE NULL-epoch base row per shard
-    (read-identical — the fold is the same associative algebra the serve
-    path applies). Usual caveat: consolidate only past the streaming
-    checkpoint, or a replayed uncommitted epoch re-inserts its delta."""
-    cur = (
-        stats.read()
-        .groupBy("shard")
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("sum_tokens").cast("long").alias("sum_tokens"),
-            F.min("min_doc").alias("min_doc"),
-            F.max("max_doc").alias("max_doc"),
-        )
-        .withColumn("_epoch", F.lit(None).cast("long"))
-    )
-    version = stats.overwrite_versioned(cur)
+    """Collapse the ledger to ONE base row per shard (read-identical — the
+    fold is the one the serve path applies)."""
+    version = consolidate(stats, _fold_stats)
     stats.vacuum(keep_last=keep_versions)
     return version
 

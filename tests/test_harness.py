@@ -69,3 +69,31 @@ def test_scale_md_renders_from_its_own_json(tmp_path):
     out = tmp_path / "SCALE.md"
     harness.write_scale_md(base, data["factor"], data["runs"], data["results"], str(out))
     assert out.read_text() == committed
+
+
+def test_stable_plan_renumbers_run_order_ids_only():
+    # the same plan from two runs: AQE completion order, exchange plan ids and
+    # expression ids differ; literals and the partition count do not
+    run1 = (
+        "ResultQueryStage 4\n"
+        "+- *(5) HashAggregate(keys=[SS#367, CP#40], functions=[max(O#465)])\n"
+        "   +- ShuffleQueryStage 3\n"
+        "      +- Exchange hashpartitioning(SS#367, CP#40, 32), [plan_id=907]\n"
+        "         +- *(2) Project [SS#367, (Strike#39 - 5) AS LS#369, _we1#471L]"
+    )
+    run2 = (
+        "ResultQueryStage 2\n"
+        "+- *(3) HashAggregate(keys=[SS#1201, CP#12], functions=[max(O#1299)])\n"
+        "   +- ShuffleQueryStage 0\n"
+        "      +- Exchange hashpartitioning(SS#1201, CP#12, 32), [plan_id=4410]\n"
+        "         +- *(1) Project [SS#1201, (Strike#11 - 5) AS LS#1203, _we1#1305L]"
+    )
+    stable = harness.stable_plan(run1)
+    assert stable == harness.stable_plan(run2)
+    assert stable == (
+        "ResultQueryStage 1\n"
+        "+- *(1) HashAggregate(keys=[SS#1, CP#2], functions=[max(O#3)])\n"
+        "   +- ShuffleQueryStage 2\n"
+        "      +- Exchange hashpartitioning(SS#1, CP#2, 32), [plan_id=1]\n"
+        "         +- *(2) Project [SS#1, (Strike#4 - 5) AS LS#5, _we1#6L]"
+    )

@@ -136,26 +136,6 @@ def test_ledger_with_psl_kernel_matches_batch(spark):
     assert "github.io" not in doms
 
 
-def test_post_consolidation_deltas_for_seen_pages_still_count(spark):
-    """Regression (ADVICE r12): the consolidated base must not key-collide
-    with later deltas for already-seen (domain, page) keys — a NULL-epoch
-    base under null-safe insert_new silently discarded them."""
-    root = tempfile.mkdtemp(prefix="domconsol_")
-    ledger = ParquetTable(spark, root)
-    update_domain_stats(spark.createDataFrame(ROWS1, SCHEMA), ledger, epoch=0)
-    consolidate_domain_stats(ledger)
-    # epochs restart after consolidation (fresh checkpoint): re-deliver a
-    # batch whose pages were ALL already seen, at a reused epoch number.
-    update_domain_stats(spark.createDataFrame(ROWS1, SCHEMA), ledger, epoch=0)
-    expected = _snap(
-        domain_stats(_batch_enriched(spark, ROWS1 + ROWS1), quality_scale=50)
-    )
-    assert _snap(current_domain_stats(ledger, quality_scale=50)) == expected
-    # negative epochs are reserved for the base row
-    with pytest.raises(ValueError):
-        update_domain_stats(spark.createDataFrame(ROWS1, SCHEMA), ledger, epoch=-1)
-
-
 @pytest.mark.slow
 def test_domain_ledger_invariant_under_batch_splits(spark):
     """However the same rows split into epochs, the served stats equal the
