@@ -133,14 +133,19 @@ def time_specs(
     spark: SparkSession, specs: list, sf_dir: str, runs: int, tree: str = ROOT
 ) -> dict:
     """Each query's best of ``runs`` interleaved rounds: ``queries`` holds its
-    seconds, ``build`` and ``exec`` the split of that same round."""
+    seconds, ``build`` and ``exec`` the split of that same round and ``jobs``
+    the Spark jobs it launched, a counter host load cannot move."""
+    from schwab_elt_etl_pipeline_spark.testing.jobs import jobs_launched
+
     warm(spark, specs, sf_dir)
     best: dict[str, tuple[float, float]] = {}
+    jobs: dict[str, int] = {}
     for _ in range(runs):
         for spec in specs:
-            split = run_once(spark, spec, sf_dir)
+            split: list[float] = []
+            n = jobs_launched(spark, lambda: split.extend(run_once(spark, spec, sf_dir)))
             if spec.name not in best or sum(split) < sum(best[spec.name]):
-                best[spec.name] = split
+                best[spec.name], jobs[spec.name] = tuple(split), n
     build = {n: round(b, 3) for n, (b, _) in best.items()}
     exec_ = {n: round(e, 3) for n, (_, e) in best.items()}
     return {
@@ -150,6 +155,7 @@ def time_specs(
         "queries": {n: round(build[n] + exec_[n], 3) for n in best},
         "build": build,
         "exec": exec_,
+        "jobs": jobs,
     }
 
 

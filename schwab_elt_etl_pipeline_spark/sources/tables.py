@@ -13,12 +13,37 @@ Normalizations applied (and why):
   microsecond TIMESTAMP_NTZ (same wall-clock values DuckDB/pyarrow report).
 - Instant-typed timestamps are cast to TIMESTAMP_NTZ under a pinned UTC
   session so all engines agree on wall-clock values.
+
+Schema inference once per file version: ``spark.read.parquet`` without a
+schema runs a one-task Spark job to read it from a footer, and Spark resolves
+a relation when the DataFrame is created, so every catalog build paid that
+job once per table it loads. :func:`load_table` remembers the inferred
+``StructType`` (a plain Python value, no JVM object) per absolute path
+together with the path's file signature: ``(path, size, mtime_ns)`` of a
+file, or the sorted tuple of those for every ``*.parquet`` under a directory.
+A load whose signature matches reads with ``spark.read.schema(remembered)``
+and launches no job; a rewritten or appended table has a new signature and is
+inferred again. A path ``os.stat`` cannot see (a remote URI, a missing path)
+always takes the inferring read, so its errors are Spark's own. The lookup
+runs after ``ensure_engine_confs``, which pins ``nanosAsLong``, the one conf
+that changes what inference returns for these tables. The memo is bounded
+(``_SCHEMAS_MAX`` paths; full means cleared, as ``_SPREAD_CACHE``).
+
+``ParquetTable.read`` (``sources/warehouse.py``) keeps its own memo, keyed by
+table version instead: ``insert_new`` moves new files into the current
+version directory, so a file-set key would infer again after every
+micro-batch, while a version's columns change only through writes the table
+itself sees.
 """
 
 from __future__ import annotations
 
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from schwab_elt_etl_pipeline_spark.session import ensure_engine_confs
 
@@ -38,9 +63,12 @@ TABLES: tuple[str, ...] = (
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one benchmark table, normalized (see module docstring)."""
+    """Read one benchmark table, normalized (see module docstring).
+
+    The first load of a table's file content infers its schema (one Spark
+    job); later loads of the same content reuse it and launch none."""
     ensure_engine_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # nanos → micros with INTEGER division ("/" would round-trip through
         # double and lose precision above 2^53 ns); TIMESTAMP_NTZ keeps
@@ -49,6 +77,47 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
         )
     return df
+
+
+def _signature(path: str) -> tuple | None:
+    """``(path, size, mtime_ns)`` of a file, or the sorted tuple of those for
+    every ``*.parquet`` under a directory; None when ``os.stat`` fails."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return ((path, st.st_size, st.st_mtime_ns),)
+        files = []
+        for root, _dirs, names in os.walk(path):
+            for name in names:
+                if name.endswith(".parquet"):
+                    f = os.path.join(root, name)
+                    fst = os.stat(f)
+                    files.append((f, fst.st_size, fst.st_mtime_ns))
+        return tuple(sorted(files))
+    except (OSError, ValueError):
+        return None
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema only for file
+    content not seen before (see module docstring)."""
+    key = os.path.abspath(path)
+    sig = _signature(key)  # before the read: content changed after it re-infers
+    if sig is None:
+        return spark.read.parquet(path)
+    known = _SCHEMAS.get(key)
+    if known is not None and known[0] == sig:
+        return spark.read.schema(known[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if len(_SCHEMAS) >= _SCHEMAS_MAX and key not in _SCHEMAS:
+        _SCHEMAS.clear()
+    _SCHEMAS[key] = (sig, df.schema)
+    return df
+
+
+#: absolute path -> (file signature, schema inferred for that content)
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+_SCHEMAS_MAX = 64
 
 
 def spread_scan(df: DataFrame) -> DataFrame:

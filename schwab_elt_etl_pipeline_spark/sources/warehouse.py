@@ -427,10 +427,11 @@ class ParquetTable:
         """MERGE semantics (J7/J8) materialized as a new version.
 
         Read-modify-write under optimistic concurrency: the merge snapshots
-        the current version, computes the merged table, and commits with
-        ``base_version`` conflict detection. If a concurrent writer committed
-        in between (their rows would otherwise be silently lost), the merge
-        re-reads and retries — MERGE idempotence on keys makes the retry safe.
+        the current version and its file set, computes the merged table, and
+        commits through :meth:`commit_rewrite`. If a concurrent writer
+        committed or appended in between (their rows would otherwise be
+        silently lost), the merge re-reads and retries — MERGE idempotence on
+        keys makes the retry safe.
         """
         last: ConcurrentWriteConflict | None = None
         for _ in range(max_retries + 1):
@@ -443,14 +444,32 @@ class ParquetTable:
                 except ConcurrentWriteConflict as exc:
                     last = exc
                     continue  # another writer created the table — merge into it
+            files = set(self.data_files(base))
             merged = merge_upsert(
                 batch, self.read(base), keys=keys, insert_only=insert_only
             )
             try:
-                return self.overwrite_versioned(merged, base_version=base)
+                return self.commit_rewrite(merged, base, files)
             except ConcurrentWriteConflict as exc:
                 last = exc
         raise last if last is not None else RuntimeError("merge failed")
+
+    def commit_rewrite(self, df: DataFrame, base_version: int, base_files: set[str]) -> int:
+        """Commit ``df``, derived from ``base_version`` while that version's
+        data files were ``base_files``, as the next version.
+
+        Raises :class:`ConcurrentWriteConflict`, leaving the table as it
+        was, when a write landed after the read: a new version
+        (``base_version``), or an :meth:`insert_new` append into the base
+        version, which moves files into its directory without bumping the
+        version and is seen as a change in its file set. A write that lands
+        while the commit itself is staging is not seen."""
+        if set(self.data_files(base_version)) != base_files:
+            raise ConcurrentWriteConflict(
+                f"table {self.path}: rows were appended to version "
+                f"{base_version} after it was read"
+            )
+        return self.overwrite_versioned(df, base_version=base_version)
 
     # -- maintenance ---------------------------------------------------------
     def diff(

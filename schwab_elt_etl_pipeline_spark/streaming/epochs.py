@@ -28,10 +28,7 @@ from typing import Callable, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from schwab_elt_etl_pipeline_spark.sources.warehouse import (
-    ConcurrentWriteConflict,
-    ParquetTable,
-)
+from schwab_elt_etl_pipeline_spark.sources.warehouse import ParquetTable
 
 EPOCH = "_epoch"
 
@@ -79,12 +76,11 @@ def consolidate(table: ParquetTable, fold: Callable[[DataFrame], DataFrame]) -> 
     without a stamp column is rewritten as folded.
 
     Returns the committed version; on a missing or empty table nothing is
-    written and the current version (0 when missing) is returned. Raises
-    :class:`ConcurrentWriteConflict`, leaving the table as it was, when a
-    write landed after the read: a new version (``base_version``), or an
-    ``insert_new`` append into the current version, seen as a change in its
-    file set. A write that lands while the commit itself is writing is not
-    seen, so the precondition stays: no live writer.
+    written and the current version (0 when missing) is returned. The commit
+    goes through ``ParquetTable.commit_rewrite``, so a write that landed
+    after the read raises :class:`ConcurrentWriteConflict` and leaves the
+    table as it was. A write that lands while the commit itself is writing
+    is not seen, so the precondition stays: no live writer.
     """
     base = table.current_version()
     if base is None:
@@ -101,9 +97,4 @@ def consolidate(table: ParquetTable, fold: Callable[[DataFrame], DataFrame]) -> 
             for f in cur.schema.fields
         ]
     )
-    if set(table.data_files(base)) != files:
-        raise ConcurrentWriteConflict(
-            f"table {table.path}: rows were appended to version {base} "
-            "while it was being consolidated"
-        )
-    return table.overwrite_versioned(folded, base_version=base)
+    return table.commit_rewrite(folded, base, files)

@@ -24,10 +24,14 @@ def _specs(*names: str) -> list:
 def test_time_splits_each_query_into_build_and_exec(spark, sf_dir):
     q = "q1_pricing_summary"
     out = harness.time_specs(spark, _specs(q), sf_dir, runs=1)
-    assert {"tree", "queries", "build", "exec"} <= set(out)
+    assert {"tree", "queries", "build", "exec", "jobs"} <= set(out)
     assert out["tree"] == harness.ROOT
     assert out["build"][q] > 0 and out["exec"][q] > 0
     assert out["queries"][q] == pytest.approx(out["build"][q] + out["exec"][q], abs=1e-9)
+    # the job count is a counter, not a timing: a second round agrees
+    again = harness.time_specs(spark, _specs(q), sf_dir, runs=1)
+    assert out["jobs"][q] >= 1
+    assert again["jobs"][q] == out["jobs"][q]
 
 
 def test_oracle_passes_and_leaves_the_cache_empty(spark, sf_dir):

@@ -311,6 +311,32 @@ def test_merge_conflict_detection_and_retry(spark, table_dir):
     assert {r["k"] for r in t.read().collect()} == {1, 2, 9}
 
 
+def test_merge_keeps_an_insert_new_append_between_its_read_and_commit(
+    spark, table_dir, monkeypatch
+):
+    """``insert_new`` moves its files into the current version dir without
+    bumping the version, so ``base_version`` alone cannot see it: the merge
+    must notice the changed file set and retry, not drop the live row."""
+    import schwab_elt_etl_pipeline_spark.sources.warehouse as warehouse
+
+    t = ParquetTable(spark, table_dir)
+    t.overwrite_versioned(spark.createDataFrame([(1, "a")], "k long, v string"))
+    live = spark.createDataFrame([(3, "live")], "k long, v string")
+    real_merge_upsert = warehouse.merge_upsert
+    calls = []
+
+    def merge_upsert_after_a_live_append(*args, **kwargs):
+        if not calls:
+            t.insert_new(live, keys=["k"])  # lands after merge read the table
+        calls.append(1)
+        return real_merge_upsert(*args, **kwargs)
+
+    monkeypatch.setattr(warehouse, "merge_upsert", merge_upsert_after_a_live_append)
+    t.merge(spark.createDataFrame([(2, "b")], "k long, v string"), keys=["k"])
+    assert sorted(tuple(r) for r in t.read().collect()) == [(1, "a"), (2, "b"), (3, "live")]
+    assert len(calls) == 2  # the first attempt conflicted and re-read
+
+
 def test_merge_replay_idempotent_after_conflict_retry(spark, table_dir):
     """Replaying the same merge batch (crash-recovery contract) inserts
     nothing new even after the conflict-retry path ran."""
